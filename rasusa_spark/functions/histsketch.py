@@ -96,11 +96,11 @@ def histogram_rollup_from_finer(
     exactly associative, so this is bit-equal to the direct raw→coarse
     sketch (the quantile analog of rollup_from_finer's integer
     accumulators)."""
-    from ..operators.rollup import TIERS
+    from ..operators.rollup import bucket_expr
 
     exploded = finer.select(
         *group_cols,
-        F.date_trunc(TIERS[tier], F.col("bucket_start")).alias("bucket_start"),
+        bucket_expr(tier, "bucket_start").alias("bucket_start"),
         *[F.col("hist")[i].alias(f"_h{i}") for i in range(N_BINS)],
     )
     agg = exploded.groupBy(*group_cols, "bucket_start").agg(

@@ -18,16 +18,29 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: tier name → date_trunc unit
+#: tier name → date_trunc unit — the one tier vocabulary of the engine
 TIERS = {"raw": "minute", "1h": "hour", "1d": "day"}
+
+_UNIT_SECONDS = {"minute": 60, "hour": 3600, "day": 86400}
 
 _AGG_COLS = ["n_tok_sum", "row_count", "n_tok_min", "n_tok_max"]
 
 
-def bucket_expr(tier: str, ts_col: str = "ts"):
+def tier_unit(tier: str) -> str:
+    """``date_trunc`` unit of a tier; ValueError for a name not in TIERS."""
     if tier not in TIERS:
         raise ValueError(f"unknown tier {tier!r}; expected one of {list(TIERS)}")
-    return F.date_trunc(TIERS[tier], F.col(ts_col))
+    return TIERS[tier]
+
+
+def tier_seconds(tier: str) -> int:
+    """Width of a tier's buckets in seconds (the ``width_s`` of the
+    time_bucket carriers in operators/timeseries.py)."""
+    return _UNIT_SECONDS[tier_unit(tier)]
+
+
+def bucket_expr(tier: str, ts_col: str = "ts"):
+    return F.date_trunc(tier_unit(tier), F.col(ts_col))
 
 
 def rollup(
@@ -64,7 +77,7 @@ def rollup_from_finer(
     src = finer.where(~F.col("gap_filled"))
     return (
         src.groupBy(
-            *group_cols, F.date_trunc(TIERS[tier], F.col("bucket_start")).alias("bucket_start")
+            *group_cols, bucket_expr(tier, "bucket_start").alias("bucket_start")
         )
         .agg(
             F.sum("n_tok_sum").alias("n_tok_sum"),
@@ -106,7 +119,7 @@ def realtime_rollup(
     from datetime import datetime
 
     wm_dt = datetime.fromisoformat(watermark)
-    unit = TIERS[tier]
+    unit = tier_unit(tier)
     aligned = {
         "minute": wm_dt.replace(second=0, microsecond=0),
         "hour": wm_dt.replace(minute=0, second=0, microsecond=0),

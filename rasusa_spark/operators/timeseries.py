@@ -830,8 +830,8 @@ def topn_partials(
     (series, bucket, key) exact integer (value_sum, n_rows) — the one
     data-scale combinable groupBy. Integer sums are exactly associative,
     so the carrier re-rolls to coarser tiers (``topn_from_finer``) and
-    merges O(delta) (``merge_topn_increment``) bit-for-bit; any top-N cut
-    over the re-rolled carrier equals the cut over raw."""
+    merges O(delta) (``merge_increment(kind="topn")``) bit-for-bit; any
+    top-N cut over the re-rolled carrier equals the cut over raw."""
     b = time_bucket_expr(width_s, ts_col, origin_s=origin_s)
     return df.groupBy(
         *series_cols, b.alias("bucket_start"), F.col(key_col).alias(key_col)

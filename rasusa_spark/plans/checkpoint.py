@@ -76,16 +76,11 @@ def read_commit_log(spark: SparkSession, checkpoint_path: str) -> DataFrame:
     any other read failure (corruption, permissions) propagates — silently
     reprocessing everything would append duplicate commit rows and break the
     one-row-per-bucket lineage invariant (ADVICE r1)."""
-    from pyspark.errors import AnalysisException
+    from ..streaming.incremental import read_store
 
     path = os.path.join(checkpoint_path, "commits")
-    try:
-        return spark.read.schema(COMMIT_SCHEMA).parquet(path)
-    except AnalysisException as e:
-        cond = getattr(e, "getCondition", lambda: None)() or str(e)
-        if "PATH_NOT_FOUND" in str(cond):
-            return spark.createDataFrame([], COMMIT_SCHEMA)
-        raise
+    log = read_store(spark, path, COMMIT_SCHEMA)
+    return spark.createDataFrame([], COMMIT_SCHEMA) if log is None else log
 
 
 def run_downsample_job(

@@ -23,6 +23,12 @@ Mechanics:
   commit log, carrying (source, bucket_start, rows/tokens dropped,
   run id) — the lineage story stays complete after the raw rows are gone.
 
+Tier-cascade retention (``apply_tier_retention(kind=…)``) applies the same
+covered-drop contract to the fine tier of every mergeable carrier in
+streaming/incremental.py's ``CARRIERS``: one body re-rolls the doomed
+fine rows with the carrier's ``from_finer`` and null-safe anti-joins them
+against the coarse store.
+
 Reference: rasusa has no storage tiering; the tier layout mirrors
 scripts/run_job.py (`retained/` + `rollup_{raw,1h,1d}/`).
 """
@@ -30,11 +36,13 @@ scripts/run_job.py (`retained/` + `rollup_{raw,1h,1d}/`).
 from __future__ import annotations
 
 import os
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.rollup import TIERS, rollup
+from ..operators.rollup import rollup, tier_unit
+from ..streaming.incremental import _PART, _fs, carrier
 
 RETENTION_SCHEMA = (
     "run_id string, source string, bucket_start timestamp, "
@@ -46,12 +54,6 @@ class RetentionError(RuntimeError):
     """The coarser tier does not cover the span requested for dropping."""
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
-    jvm = spark._jvm  # noqa: SLF001
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath  # noqa: SLF001
-
-
 def _check_cutoff_alignment(
     spark: SparkSession, cutoff, coarse: str, drop_before: str
 ) -> None:
@@ -61,7 +63,7 @@ def _check_cutoff_alignment(
     mid-day cutoff — legal when coarse='1h' — would delete whole day dirs
     that still contain fine rows >= cutoff: unverified data loss)."""
     aligned = spark.range(1).select(
-        (F.date_trunc(TIERS[coarse], cutoff) == cutoff).alias("coarse_ok"),
+        (F.date_trunc(tier_unit(coarse), cutoff) == cutoff).alias("coarse_ok"),
         (F.date_trunc("day", cutoff) == cutoff).alias("day_ok"),
     ).first()
     if not aligned.coarse_ok:
@@ -117,8 +119,7 @@ def apply_retention(
 
     if not force:
         tier_path = os.path.join(output_path, f"rollup_{tier}")
-        if tier not in TIERS:
-            raise ValueError(f"unknown tier {tier!r}")
+        tier_unit(tier)
         stored = spark.read.parquet(tier_path).where(~F.col("gap_filled"))
         fresh = rollup(doomed, tier, group_cols=("source",))
         uncovered = fresh.join(
@@ -136,7 +137,7 @@ def apply_retention(
             )
 
     # delete partition directories through the Hadoop FS (storage-agnostic)
-    fs, _ = _hadoop_fs(spark, retained_path)
+    fs, _ = _fs(spark, retained_path)
     jvm_path = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
     for r in stats:
         part_dir = os.path.join(
@@ -169,47 +170,50 @@ def apply_tier_retention(
     coarse: str = "1d",
     run_id: str = "tier-retention",
     force: bool = False,
+    kind: str = "rollup",
+    **params,
 ) -> DataFrame:
     """Retention for the TIER CASCADE itself (the TimescaleDB
     retention-policy-on-continuous-aggregates analog): drop FINE-tier
-    bucket-day partitions older than ``drop_before`` once the COARSE tier
-    provably covers them — keep 1h for the hot window, 1d forever.
+    bucket-day partitions of the ``{kind}_{fine}`` store older than
+    ``drop_before`` once the ``{kind}_{coarse}`` store provably covers them
+    — keep 1h for the hot window, 1d forever. ``kind`` is any carrier of
+    streaming/incremental.py's ``CARRIERS``; ``params`` are its
+    from_finer params (e.g. ``key_col`` for topn).
 
     Safety contract (mirrors ``apply_retention``):
 
-    - ``drop_before`` must sit ON a coarse-bucket boundary
-      (``date_trunc(coarse, cutoff) == cutoff``) — otherwise a coarse
-      bucket would lose part of its fine history and later re-rolls of
-      the surviving fine rows could silently disagree with the store;
-    - the about-to-drop fine rows are re-rolled to the coarse tier
-      (exactly associative integer aggregates) and anti-joined against
-      the stored coarse tier on ALL aggregate columns: any mismatch —
-      missing coarse bucket, partial fine coverage, drifted values —
-      raises :class:`RetentionError` and deletes nothing;
+    - ``drop_before`` must sit ON a coarse-bucket boundary and on a day
+      boundary (``_check_cutoff_alignment``) — otherwise a coarse bucket
+      would lose part of its fine history;
+    - the about-to-drop fine rows are re-rolled to the coarse tier with the
+      carrier's ``from_finer`` (bit-equal to a re-aggregation of raw) and
+      NULL-SAFE anti-joined against the stored coarse tier on every column
+      of the re-rolled carrier (changes carries null runner-up samples in
+      singleton buckets; distinct compares the id SETS, not just counts):
+      any mismatch — missing coarse bucket, partial fine coverage, drifted
+      values — raises :class:`RetentionError` and deletes nothing;
     - deletion removes whole ``bucket_part`` (day) partition directories
-      through the Hadoop FileSystem API (day-partitioned stores +
-      coarse-aligned cutoffs mean partitions drop whole, never split);
-    - dropped partitions are appended to ``{state}/tier_retention``.
+      through the Hadoop FileSystem API;
+    - dropped partitions are appended to ``{state}/tier_retention`` with
+      the carrier's ``dropped`` measure as ``n_tok_dropped`` and the
+      store name as ``tier`` (the rollup store logs the bare fine tier).
 
-    Works on the stores written by ``streaming/incremental.py`` merges
-    (hive-partitioned by ``bucket_part`` = yyyyMMdd of bucket_start)."""
-    from ..operators.rollup import rollup_from_finer
-
-    if fine not in TIERS or coarse not in TIERS:
-        raise ValueError(f"unknown tier in ({fine!r}, {coarse!r})")
-    fine_path = os.path.join(state_path, f"rollup_{fine}")
-    coarse_path = os.path.join(state_path, f"rollup_{coarse}")
+    Works on the stores written by ``merge_increment`` (hive-partitioned by
+    ``bucket_part`` = yyyyMMdd of bucket_start)."""
+    c = carrier(kind)
+    tier_unit(fine), tier_unit(coarse)  # ValueError before any Spark job
+    fine_path = os.path.join(state_path, f"{kind}_{fine}")
     cutoff = F.to_timestamp(F.lit(drop_before))
 
     _check_cutoff_alignment(spark, cutoff, coarse, drop_before)
 
-    fine_df = spark.read.parquet(fine_path)
-    doomed = fine_df.where(F.col("bucket_start") < cutoff)
+    doomed = spark.read.parquet(fine_path).where(F.col("bucket_start") < cutoff)
     parts = (
-        doomed.groupBy("bucket_part")
+        doomed.groupBy(_PART)
         .agg(
             F.count(F.lit(1)).alias("rows_dropped"),
-            F.sum("n_tok_sum").alias("n_tok_dropped"),
+            F.sum(F.expr(c.dropped)).alias("n_dropped"),
         )
         .collect()
     )
@@ -217,273 +221,34 @@ def apply_tier_retention(
         return spark.createDataFrame([], RETENTION_SCHEMA)
 
     if not force:
-        stored = spark.read.parquet(coarse_path).where(~F.col("gap_filled"))
-        fresh = rollup_from_finer(doomed, coarse, group_cols=("source",))
-        uncovered = fresh.join(
-            stored,
-            on=[
-                "source", "bucket_start", "n_tok_sum", "row_count",
-                "n_tok_min", "n_tok_max",
-            ],
-            how="left_anti",
+        fresh = c.from_finer(doomed.drop(_PART), coarse, ["source"], **params)
+        stored = spark.read.parquet(
+            os.path.join(state_path, f"{kind}_{coarse}")
+        ).select(*fresh.columns)
+        cond = reduce(
+            lambda a, b: a & b,
+            [F.col(f"_f.{k}").eqNullSafe(F.col(f"_s.{k}")) for k in fresh.columns],
         )
+        uncovered = fresh.alias("_f").join(stored.alias("_s"), cond, "left_anti")
         missing = uncovered.select("source", "bucket_start").limit(5).collect()
         if missing:
             raise RetentionError(
-                f"rollup_{coarse} does not cover the {fine} drop span "
+                f"{kind}_{coarse} does not cover the {kind}_{fine} drop span "
                 f"bit-for-bit; first uncovered: "
                 f"{[(r.source, str(r.bucket_start)) for r in missing]} — "
                 "nothing was deleted"
             )
 
-    fs, _ = _hadoop_fs(spark, fine_path)
+    fs, _ = _fs(spark, fine_path)
     jvm_path = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
     for r in parts:
         fs.delete(
-            jvm_path(os.path.join(fine_path, f"bucket_part={r.bucket_part}")),
-            True,
+            jvm_path(os.path.join(fine_path, f"{_PART}={r.bucket_part}")), True
         )
 
+    label = fine if kind == "rollup" else f"{kind}_{fine}"
     log_rows = [
-        (
-            run_id,
-            f"bucket_part={r.bucket_part}",
-            None,
-            r.rows_dropped,
-            r.n_tok_dropped,
-            fine,
-        )
-        for r in parts
-    ]
-    log_df = spark.createDataFrame(log_rows, RETENTION_SCHEMA)
-    log_df.write.mode("append").parquet(
-        os.path.join(state_path, "tier_retention")
-    )
-    return log_df
-
-
-def apply_sketch_tier_retention(
-    spark: SparkSession,
-    state_path: str,
-    *,
-    drop_before: str,
-    kind: str,
-    fine: str = "1h",
-    coarse: str = "1d",
-    run_id: str = "tier-retention",
-    force: bool = False,
-    key_col: str = "user_id",
-) -> DataFrame:
-    """Tier-cascade retention for the SKETCH carriers — the same
-    covered-drop contract as :func:`apply_tier_retention`, specialized per
-    mergeable state:
-
-    - ``kind='distinct'``: re-roll the doomed 1h sorted id sets to the
-      coarse tier by set union and anti-join the stored coarse tier on
-      (group, bucket, id_set) — ARRAY equality, so coverage means the
-      coarse store holds the exact union sets, not just equal counts.
-      This is the carrier where retention matters most at 100 TB: the
-      fine-tier per-bucket sets are the large state.
-    - ``kind='cms'``: re-roll by cell-wise addition and anti-join on
-      (group, bucket, r, idx, cnt) — every counter must match.
-    - ``kind='deriv'`` (r5): re-roll the doomed 1h regression statistics
-      to the coarse tier via exact integer moment RE-BASING
-      (operators/timeseries.py:deriv_from_finer) and anti-join on every
-      statistic (n, Σt, Σv, Σtv, Σt²) — coverage means the coarse store
-      holds the bit-identical sufficient statistics, so the coarse slope
-      is exactly what the dropped fine tier would have produced.
-    - ``kind='ohlc'`` (r6): re-roll via ohlc_from_finer (min_by/max_by on
-      the carried (micros, id) order keys) and anti-join on the FULL
-      candlestick carrier including the order keys.
-    - ``kind='topn'`` (r6): re-roll via topn_from_finer (integer sums per
-      (group, bucket, ``key_col``)) and anti-join per key.
-    - ``kind='changes'`` (r6): re-roll via changes_from_finer's boundary
-      algebra and NULL-SAFE anti-join on the full carrier (singleton
-      buckets carry null runner-up samples — plain equality would refuse
-      spuriously).
-    - ``kind='rate'`` (r6): re-roll via rate_fold's reset-aware boundary
-      algebra (rate_from_finer) and anti-join on the full carrier
-      including the endpoint samples.
-    - ``kind='twa'`` (r6): re-roll via twa_fold's LOCF boundary-segment
-      algebra (twa_from_finer), same full-carrier anti-join shape as
-      'rate'.
-
-    The cutoff must sit on a coarse-bucket boundary; refusal deletes
-    nothing; whole ``bucket_part`` day partitions drop via the Hadoop FS;
-    drops append to ``{state}/tier_retention``."""
-    if kind not in (
-        "distinct", "cms", "deriv", "ohlc", "topn", "changes", "rate",
-        "twa",
-    ):
-        raise ValueError(
-            "kind must be one of 'distinct', 'cms', 'deriv', 'ohlc', "
-            f"'topn', 'changes', 'rate', 'twa', got {kind!r}"
-        )
-    if fine not in TIERS or coarse not in TIERS:
-        raise ValueError(f"unknown tier in ({fine!r}, {coarse!r})")
-    fine_path = os.path.join(state_path, f"{kind}_{fine}")
-    coarse_path = os.path.join(state_path, f"{kind}_{coarse}")
-    cutoff = F.to_timestamp(F.lit(drop_before))
-
-    _check_cutoff_alignment(spark, cutoff, coarse, drop_before)
-
-    fine_df = spark.read.parquet(fine_path)
-    doomed = fine_df.where(F.col("bucket_start") < cutoff)
-    if kind == "distinct":
-        size_expr = F.sum(F.size("id_set")).alias("n_dropped")
-    elif kind == "cms":
-        size_expr = F.sum("cnt").alias("n_dropped")
-    elif kind == "topn":
-        size_expr = F.sum("n_rows").alias("n_dropped")
-    else:  # deriv / ohlc / changes all carry n_samples
-        size_expr = F.sum("n_samples").alias("n_dropped")
-    parts = (
-        doomed.groupBy("bucket_part")
-        .agg(F.count(F.lit(1)).alias("rows_dropped"), size_expr)
-        .collect()
-    )
-    if not parts:
-        return spark.createDataFrame([], RETENTION_SCHEMA)
-
-    if not force:
-        stored = spark.read.parquet(coarse_path)
-        coarse_bucket = F.date_trunc(
-            TIERS[coarse], F.col("bucket_start")
-        ).alias("bucket_start")
-        if kind == "distinct":
-            fresh = (
-                doomed.groupBy("source", coarse_bucket)
-                .agg(
-                    F.array_sort(
-                        F.array_distinct(F.flatten(F.collect_list("id_set")))
-                    ).alias("id_set")
-                )
-            )
-            join_cols = ["source", "bucket_start", "id_set"]
-            stored_cmp = stored.select(*join_cols)
-        elif kind == "cms":
-            fresh = doomed.groupBy(
-                "source", coarse_bucket, "r", "idx", "d", "w"
-            ).agg(F.sum("cnt").alias("cnt"))
-            join_cols = ["source", "bucket_start", "r", "idx", "d", "w", "cnt"]
-            stored_cmp = stored.select(*join_cols)
-        elif kind == "deriv":
-            from ..operators.timeseries import deriv_from_finer
-
-            width_s = {"1h": 3600, "1d": 86400}[coarse]
-            fresh = deriv_from_finer(
-                doomed.drop("bucket_part"), width_s, series_cols=("source",)
-            )
-            join_cols = [
-                "source", "bucket_start", "n_samples",
-                "_st", "_sv", "_stv", "_stt",
-            ]
-            stored_cmp = stored.select(*join_cols)
-        elif kind == "ohlc":
-            from ..operators.timeseries import ohlc_from_finer
-
-            width_s = {"1h": 3600, "1d": 86400}[coarse]
-            fresh = ohlc_from_finer(
-                doomed.drop("bucket_part"), width_s, series_cols=("source",)
-            )
-            join_cols = [
-                "source", "bucket_start", "open_us", "open_id", "v_open",
-                "close_us", "close_id", "v_close", "v_high", "v_low",
-                "volume", "n_samples",
-            ]
-            stored_cmp = stored.select(*join_cols)
-        elif kind == "topn":
-            from ..operators.timeseries import topn_from_finer
-
-            width_s = {"1h": 3600, "1d": 86400}[coarse]
-            fresh = topn_from_finer(
-                doomed.drop("bucket_part"), width_s, key_col=key_col,
-                series_cols=("source",),
-            )
-            join_cols = [
-                "source", "bucket_start", key_col, "value_sum", "n_rows",
-            ]
-            stored_cmp = stored.select(*join_cols)
-        elif kind == "rate":
-            from ..operators.timeseries import rate_from_finer
-
-            width_s = {"1h": 3600, "1d": 86400}[coarse]
-            fresh = rate_from_finer(
-                doomed.drop("bucket_part"), width_s, series_cols=("source",)
-            )
-            join_cols = [
-                "source", "bucket_start", "increase", "n_samples",
-                "u_first", "id_first", "v_first",
-                "u_last", "id_last", "v_last",
-            ]
-            stored_cmp = stored.select(*join_cols)
-        elif kind == "twa":
-            from ..operators.timeseries import twa_from_finer
-
-            width_s = {"1h": 3600, "1d": 86400}[coarse]
-            fresh = twa_from_finer(
-                doomed.drop("bucket_part"), width_s, series_cols=("source",)
-            )
-            join_cols = [
-                "source", "bucket_start", "num", "n_samples",
-                "u_first", "id_first", "v_first",
-                "u_last", "id_last", "v_last",
-            ]
-            stored_cmp = stored.select(*join_cols)
-        else:  # changes
-            from ..operators.timeseries import changes_from_finer
-
-            width_s = {"1h": 3600, "1d": 86400}[coarse]
-            fresh = changes_from_finer(
-                doomed.drop("bucket_part"), width_s, series_cols=("source",)
-            )
-            join_cols = [
-                "source", "bucket_start", "n_changes", "n_samples",
-                "u_first", "id_first", "v_first",
-                "u_last", "id_last", "v_last",
-                "u_prev", "id_prev", "v_prev",
-            ]
-            stored_cmp = stored.select(*join_cols)
-        if kind == "changes":
-            # null-safe equality: singleton buckets carry null runner-ups
-            from functools import reduce
-
-            f_a, s_a = fresh.alias("_f"), stored_cmp.alias("_s")
-            cond = reduce(
-                lambda a, b: a & b,
-                [
-                    F.col(f"_f.{c}").eqNullSafe(F.col(f"_s.{c}"))
-                    for c in join_cols
-                ],
-            )
-            uncovered = f_a.join(s_a, on=cond, how="left_anti")
-        else:
-            uncovered = fresh.join(stored_cmp, on=join_cols, how="left_anti")
-        missing = uncovered.select("source", "bucket_start").limit(5).collect()
-        if missing:
-            raise RetentionError(
-                f"{kind}_{coarse} does not cover the {kind}_{fine} drop "
-                f"span exactly; first uncovered: "
-                f"{[(r.source, str(r.bucket_start)) for r in missing]} — "
-                "nothing was deleted"
-            )
-
-    fs, _ = _hadoop_fs(spark, fine_path)
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
-    for r in parts:
-        fs.delete(
-            jvm_path(os.path.join(fine_path, f"bucket_part={r.bucket_part}")),
-            True,
-        )
-    log_rows = [
-        (
-            run_id,
-            f"bucket_part={r.bucket_part}",
-            None,
-            r.rows_dropped,
-            r.n_dropped,
-            f"{kind}_{fine}",
-        )
+        (run_id, f"{_PART}={r.bucket_part}", None, r.rows_dropped, r.n_dropped, label)
         for r in parts
     ]
     log_df = spark.createDataFrame(log_rows, RETENTION_SCHEMA)

@@ -52,7 +52,7 @@ from rasusa_spark.operators.similarity import (
 from rasusa_spark.streaming.incremental import (
     _fs,
     _fs_delete,
-    _read_parquet_or_none,
+    read_store,
 )
 
 _STORE = "ivf_store"
@@ -112,7 +112,7 @@ def _txn_promote_ivf(spark: SparkSession, state_path: str) -> None:
     )
 
     all_files = set(files)
-    manifest = _read_parquet_or_none(spark, p["manifest"])
+    manifest = read_store(spark, p["manifest"])
     if manifest is not None:
         all_files |= {r.path for r in manifest.collect()}
     spark.createDataFrame(
@@ -265,7 +265,7 @@ def merge_ivf_increment(
     recover_pending_ivf_compaction(spark, state_path)
     p = _paths(state_path)
 
-    manifest = _read_parquet_or_none(spark, p["manifest"])
+    manifest = read_store(spark, p["manifest"])
     if manifest is not None:
         seen = {r.path for r in manifest.collect()}
         dup = sorted(f for f in files if f in seen)
@@ -276,7 +276,7 @@ def merge_ivf_increment(
                 "recover_pending_ivf"
             )
 
-    stored_centroids = _read_parquet_or_none(spark, p["centroids"])
+    stored_centroids = read_store(spark, p["centroids"])
     if stored_centroids is None:
         centroids = ivf_build_centroids(
             emb_delta, n_cells, sample, iters, seed, vec_col, id_col

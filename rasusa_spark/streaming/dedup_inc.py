@@ -68,7 +68,7 @@ from rasusa_spark.operators.dedup import (
 from rasusa_spark.streaming.incremental import (
     _fs,
     _fs_delete,
-    _read_parquet_or_none,
+    read_store,
 )
 
 _STORE = "minhash_store"
@@ -173,7 +173,7 @@ def _txn_promote_dedup(spark: SparkSession, state_path: str) -> None:
     pairs.write.mode("overwrite").parquet(os.path.join(p["pairs"], f"txn={txn}"))
 
     all_files = set(files)
-    manifest = _read_parquet_or_none(spark, p["manifest"])
+    manifest = read_store(spark, p["manifest"])
     if manifest is not None:
         all_files |= {r.path for r in manifest.collect()}
     spark.createDataFrame(
@@ -319,7 +319,7 @@ def compact_minhash_store(spark: SparkSession, state_path: str) -> dict:
 
 def _check_config(spark: SparkSession, state_path: str, cfg: dict) -> None:
     p = _paths(state_path)
-    stored = _read_parquet_or_none(spark, p["config"])
+    stored = read_store(spark, p["config"])
     if stored is None:
         spark.createDataFrame(
             [tuple(cfg[k] for k in _CONFIG_FIELDS)],
@@ -346,7 +346,7 @@ def minhash_pairs_store(spark: SparkSession, state_path: str) -> DataFrame:
     increment emitted zero pairs (only _SUCCESS markers on disk) still
     reads back as an empty, correctly-typed table."""
     p = _paths(state_path)
-    cfg = _read_parquet_or_none(spark, p["config"])
+    cfg = read_store(spark, p["config"])
     if cfg is None:
         return spark.createDataFrame([], PAIRS_SCHEMA)
     schema = T.StructType.fromDDL(cfg.collect()[0].pairs_schema)
@@ -409,7 +409,7 @@ def merge_minhash_increment(
         },
     )
 
-    manifest = _read_parquet_or_none(spark, p["manifest"])
+    manifest = read_store(spark, p["manifest"])
     if manifest is not None:
         seen = {r.path for r in manifest.collect()}
         dup = sorted(f for f in files if f in seen)
@@ -441,7 +441,7 @@ def merge_minhash_increment(
             F.col(f"y.{id_col}").alias("id_b"),
         )
     )
-    stored_bands = _read_parquet_or_none(spark, p["bands"])
+    stored_bands = read_store(spark, p["bands"])
     if stored_bands is not None:
         # bounded driver list (<= n_shards entries): real partition
         # pruning on the store read — only shards the delta probes
@@ -470,7 +470,7 @@ def merge_minhash_increment(
     # candidate→signature joins read O(delta-touched shards), not the
     # whole corpus; ids are globally unique, so each signature exists in
     # exactly one txn)
-    stored_sigs = _read_parquet_or_none(spark, p["sigs"])
+    stored_sigs = read_store(spark, p["sigs"])
     sig_lookup = sigs_delta.select(id_col, "signature")
     if stored_sigs is not None:
         # bounded driver list (<= n_shards entries)

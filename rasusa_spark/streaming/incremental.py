@@ -1,28 +1,51 @@
-"""Incremental rollup maintenance + Structured Streaming ingestion
+"""Incremental tier maintenance + Structured Streaming ingestion
 (SURVEY §2.10; north_rule: "continuous aggregates", "bucket watermarks").
 
 Two complementary paths:
 
-- ``merge_rollup_increment`` — batch-incremental continuous-aggregate
-  maintenance: partial-aggregate ONLY the new rows, then merge into the
-  stored tier by re-aggregating (sum-of-sums / min-of-mins — the same
-  associativity that makes tier re-rollup exact). Buckets older than the
-  stored watermark are rejected as late (the engine analog of the
+- ``merge_increment`` — batch-incremental continuous-aggregate
+  maintenance for every mergeable tier carrier: build the carrier's
+  partial state from ONLY the new rows, then merge it into the stored
+  ``{kind}_{tier}`` store by re-rolling the union of the touched stored
+  rows and the increment with the carrier's ``from_finer`` at the SAME
+  tier (re-bucketing an on-grid ``bucket_start`` is the identity, so the
+  re-roll is exactly the carrier's associative merge). Buckets older than
+  the stored watermark are rejected as late (the engine analog of the
   reference's ordered-input guard, source.rs:57-116) or accepted when
-  ``allow_late`` (they merge exactly, since merge is associative).
+  ``allow_late`` (they merge exactly, since the merge is associative).
 
   The store is hive-partitioned by bucket day; a merge reads and rewrites
   ONLY the partitions its increment touches (dynamic partition overwrite —
   the same pattern plans/checkpoint.py uses), so the I/O is O(delta), not
-  O(store). Round 1 rewrote the whole tier per increment (VERDICT r1 weak
-  #5) through a non-atomic tmp-copy cycle (ADVICE r1); both are gone — the
-  per-group watermark lives in a compact side table instead of being
-  re-derived from a full store scan.
+  O(store). The per-group watermark lives in a compact side table instead
+  of being re-derived from a full store scan.
 
 - ``streaming_rollup`` — true Structured Streaming: file-source readStream →
   event-time window aggregate with a watermark → parquet/memory sink.
   At cluster scale the same query runs against Kafka/Iceberg sources
   unchanged; state-store handles the open buckets.
+
+The carrier table ``CARRIERS`` drives ``merge_increment`` here and
+``plans/retention.apply_tier_retention``. Each entry: kind (= store
+prefix) — partials / from_finer — the measure tier retention logs as
+dropped.
+
+- ``rollup`` — operators/rollup ``rollup`` / ``rollup_from_finer`` —
+  ``n_tok_sum``
+- ``hist`` — functions/histsketch ``histogram_rollup`` /
+  ``histogram_rollup_from_finer`` — Σ ``hist`` bins
+- ``distinct`` — functions/distinct ``distinct_partials`` /
+  ``distinct_from_finer`` — ``size(id_set)``
+- ``cms`` — functions/cms ``cms_partials`` / ``cms_from_finer`` — ``cnt``
+- ``deriv``, ``changes``, ``ohlc``, ``rate``, ``twa`` — operators/timeseries
+  ``{kind}_partials`` / ``{kind}_from_finer`` — ``n_samples``
+- ``topn`` — operators/timeseries ``topn_partials`` / ``topn_from_finer``
+  — ``n_rows``
+
+Every carrier accepts the tiers of ``operators.rollup.TIERS`` (raw, 1h,
+1d). The changes, rate and twa merges are exact for increments appended
+in (ts, id) order within a bucket; their folds refuse interleaved
+same-bucket appends.
 """
 
 from __future__ import annotations
@@ -30,13 +53,19 @@ from __future__ import annotations
 import contextlib
 import os
 import re
+from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.rollup import TIERS, rollup
+from ..functions.cms import cms_from_finer, cms_partials
+from ..functions.distinct import distinct_from_finer, distinct_partials
+from ..functions.histsketch import histogram_rollup, histogram_rollup_from_finer
+from ..operators import timeseries as ts
+from ..operators.rollup import rollup, rollup_from_finer, tier_seconds
 
 _AGGS = ["n_tok_sum", "row_count", "n_tok_min", "n_tok_max"]
 _PART = "bucket_part"  # hive partition column: day of bucket_start
@@ -78,22 +107,6 @@ def _dynamic_overwrite(spark: SparkSession):
             spark.conf.set(key, prev)
 
 
-def _read_parquet_or_none(spark: SparkSession, path: str) -> DataFrame | None:
-    """Read a parquet dir, returning None when the path does not exist OR
-    holds no parquet footers (a legitimately-empty increment can promote a
-    directory containing only _SUCCESS — semantically 'no state yet');
-    any other failure (corruption, permissions) propagates — silently
-    treating those as 'no state' would trigger duplicate reprocessing
-    (ADVICE r1)."""
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as e:
-        cond = str(getattr(e, "getCondition", lambda: "")() or "") + str(e)
-        if "PATH_NOT_FOUND" in cond or "UNABLE_TO_INFER_SCHEMA" in cond:
-            return None
-        raise
-
-
 def _fs(spark: SparkSession, path: str):
     """Hadoop FileSystem + qualified Path (local/HDFS/S3A alike)."""
     jpath = spark._jvm.org.apache.hadoop.fs.Path(path)  # noqa: SLF001
@@ -107,17 +120,24 @@ def _fs_delete(spark: SparkSession, path: str) -> None:
         fs.delete(jpath, True)
 
 
-def _read_store_or_empty(spark: SparkSession, store: str, schema) -> DataFrame:
-    """Read the tier store, dropping the hive partition column; an absent
-    OR file-less store (a legitimately empty increment created the
-    directory but no part files) reads as an empty, correctly-typed
-    table instead of throwing schema inference errors."""
+def read_store(
+    spark: SparkSession, path: str, schema: T.StructType | None = None
+) -> DataFrame | None:
+    """Read a parquet store (with ``schema`` when given), or None when it
+    does not exist yet — tested through the FS, so a first read logs no
+    FileNotFoundException — OR holds no parquet footers (a legitimately
+    empty increment can promote a directory containing only _SUCCESS —
+    semantically 'no state yet'). Any other failure (corruption,
+    permissions) propagates: silently treating those as 'no state' would
+    trigger duplicate reprocessing (ADVICE r1)."""
+    fs, jpath = _fs(spark, path)
+    if not fs.exists(jpath):
+        return None
     try:
-        return spark.read.parquet(store).drop(_PART)
+        return (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
     except AnalysisException as e:
-        msg = str(e)
-        if "PATH_NOT_FOUND" in msg or "UNABLE_TO_INFER_SCHEMA" in msg:
-            return spark.createDataFrame([], schema)
+        if "UNABLE_TO_INFER_SCHEMA" in str(e):
+            return None
         raise
 
 
@@ -182,7 +202,7 @@ def _txn_promote(spark: SparkSession, state_path: str, store_name: str) -> None:
     ).parquet(wm_path)
 
     files = {r.path for r in intent_df.select("path").collect()}
-    manifest = _read_parquet_or_none(spark, p["manifest"])
+    manifest = read_store(spark, p["manifest"])
     if manifest is not None:
         files |= {r.path for r in manifest.collect()}
     spark.createDataFrame(
@@ -259,7 +279,7 @@ def _merge_increment(
     inc = inc.persist()
     store = os.path.join(state_path, store_name)
     wm_path = os.path.join(state_path, f"{store_name}_wm")
-    wm = _read_parquet_or_none(spark, wm_path)
+    wm = read_store(spark, wm_path)
 
     if wm is not None and not allow_late:
         late = inc.join(wm, on=group_cols, how="inner").where(
@@ -275,7 +295,7 @@ def _merge_increment(
 
     if txn_files is not None:
         p = _txn_paths(state_path, store_name)
-        manifest = _read_parquet_or_none(spark, p["manifest"])
+        manifest = read_store(spark, p["manifest"])
         if manifest is not None:
             seen = {r.path for r in manifest.collect()}
             dup = sorted(f for f in txn_files if f in seen)
@@ -288,7 +308,7 @@ def _merge_increment(
                 )
 
     part_expr = F.date_format("bucket_start", "yyyyMMdd").alias(_PART)
-    existing = _read_parquet_or_none(spark, store)
+    existing = read_store(spark, store)
     if existing is not None:
         # partition-pruned read of ONLY the touched days (bounded driver
         # list: one entry per distinct increment day)
@@ -337,7 +357,7 @@ def _merge_increment(
         ).coalesce(1).write.mode("overwrite").parquet(p["intent"])
         inc.unpersist()
         _txn_promote(spark, state_path, store_name)
-        return _read_store_or_empty(spark, store, inc.schema)
+        return _stored_tier(spark, store, inc.schema)
 
     with _dynamic_overwrite(spark):
         merged.withColumn(
@@ -349,82 +369,119 @@ def _merge_increment(
     spark.createDataFrame(new_wm_rows, new_wm.schema).coalesce(1).write.mode(
         "overwrite"
     ).parquet(wm_path)
-    return _read_store_or_empty(spark, store, inc.schema)
+    return _stored_tier(spark, store, inc.schema)
 
 
-def merge_rollup_increment(
+def _stored_tier(spark: SparkSession, store: str, schema) -> DataFrame:
+    """The merged tier without its hive partition column; a store with no
+    part files yet (an empty first increment) reads as an empty frame of
+    the increment's schema."""
+    stored = read_store(spark, store)
+    return spark.createDataFrame([], schema) if stored is None else stored.drop(_PART)
+
+
+@dataclass(frozen=True)
+class Carrier:
+    """One mergeable tier carrier. ``build`` / ``reroll`` are its partials
+    and from_finer operators; ``by_width`` marks the time_bucket signature
+    ``(df, width_s, series_cols=…)`` of operators/timeseries.py instead of
+    ``(df, tier, group_cols=…)``. ``finer_params`` are the params that
+    from_finer takes as well as partials. ``dropped`` is the SQL measure of
+    one state row that tier retention logs as ``n_tok_dropped``."""
+
+    build: Callable[..., DataFrame]
+    reroll: Callable[..., DataFrame]
+    dropped: str
+    finer_params: tuple[str, ...] = ()
+    by_width: bool = False
+
+    def _call(self, fn, df: DataFrame, tier: str, group_cols, params) -> DataFrame:
+        if self.by_width:
+            return fn(df, tier_seconds(tier), series_cols=list(group_cols), **params)
+        return fn(df, tier, group_cols=list(group_cols), **params)
+
+    def partials(self, df: DataFrame, tier: str, group_cols, **params) -> DataFrame:
+        """The carrier's state at ``tier`` built from raw rows."""
+        return self._call(self.build, df, tier, group_cols, params)
+
+    def from_finer(self, df: DataFrame, tier: str, group_cols, **params) -> DataFrame:
+        """Stored state re-rolled to ``tier`` — bit-equal to ``partials``
+        over the same raw rows; at the state's own tier it is the merge."""
+        kept = {k: v for k, v in params.items() if k in self.finer_params}
+        return self._call(self.reroll, df, tier, group_cols, kept)
+
+
+#: kind (= store prefix: the store is ``{kind}_{tier}``) → carrier
+CARRIERS: dict[str, Carrier] = {
+    "rollup": Carrier(rollup, rollup_from_finer, "n_tok_sum"),
+    "hist": Carrier(
+        histogram_rollup, histogram_rollup_from_finer,
+        "aggregate(hist, 0L, (a, x) -> a + x)",
+    ),
+    "distinct": Carrier(
+        distinct_partials, distinct_from_finer, "size(id_set)", ("max_set_size",)
+    ),
+    "cms": Carrier(cms_partials, cms_from_finer, "cnt"),
+    "deriv": Carrier(ts.deriv_partials, ts.deriv_from_finer, "n_samples", by_width=True),
+    "changes": Carrier(
+        ts.changes_partials, ts.changes_from_finer, "n_samples", by_width=True
+    ),
+    "topn": Carrier(
+        ts.topn_partials, ts.topn_from_finer, "n_rows", ("key_col",), by_width=True
+    ),
+    "ohlc": Carrier(ts.ohlc_partials, ts.ohlc_from_finer, "n_samples", by_width=True),
+    "rate": Carrier(
+        ts.rate_partials, ts.rate_from_finer, "n_samples", ("counter",), by_width=True
+    ),
+    "twa": Carrier(ts.twa_partials, ts.twa_from_finer, "n_samples", by_width=True),
+}
+
+
+def carrier(kind: str) -> Carrier:
+    if kind not in CARRIERS:
+        raise ValueError(
+            f"unknown carrier kind {kind!r}; expected one of {list(CARRIERS)}"
+        )
+    return CARRIERS[kind]
+
+
+def merge_increment(
     spark: SparkSession,
+    kind: str,
     new_rows: DataFrame,
     state_path: str,
+    *,
     tier: str = "1h",
     group_cols: tuple[str, ...] | list[str] = ("source",),
     allow_late: bool = False,
     files: list[str] | None = None,
+    **params,
 ) -> DataFrame:
-    """Fold ``new_rows`` into the stored tier at ``state_path``; returns the
-    updated tier. Watermark = max bucket per group already merged (kept in a
-    compact side table, not re-derived from the store); late rows (bucket <
+    """Fold ``new_rows`` into the ``{kind}_{tier}`` store at ``state_path``
+    and return the updated tier. ``params`` are the carrier's partials
+    params (``id_col``, ``key_col``, ``max_set_size``, ``counter``, …).
+    Watermark = max bucket per group already merged (kept in a compact
+    side table, not re-derived from the store); late rows (bucket <
     watermark) raise unless ``allow_late``. Only the bucket-day partitions
-    the increment touches are read and rewritten."""
+    the increment touches are read and rewritten; ``files`` makes the merge
+    a crash-safe transaction (see ``_merge_increment``). An unknown kind or
+    tier raises ValueError before any Spark job."""
+    c = carrier(kind)
     group_cols = list(group_cols)
-    inc = rollup(new_rows, tier, group_cols=group_cols)
-
-    def remerge(union: DataFrame) -> DataFrame:
-        return (
-            union.groupBy(*group_cols, "bucket_start")
-            .agg(
-                F.sum("n_tok_sum").alias("n_tok_sum"),
-                F.sum("row_count").alias("row_count"),
-                F.min("n_tok_min").alias("n_tok_min"),
-                F.max("n_tok_max").alias("n_tok_max"),
-            )
-            .withColumn("gap_filled", F.lit(False))
-        )
-
+    inc = c.partials(new_rows, tier, group_cols, **params)
     return _merge_increment(
-        spark, inc, state_path, f"rollup_{tier}", group_cols, remerge,
-        allow_late, txn_files=files
+        spark, inc, state_path, f"{kind}_{tier}", group_cols,
+        lambda union: c.from_finer(union, tier, group_cols, **params),
+        allow_late, txn_files=files,
     )
 
 
-def merge_histogram_increment(
-    spark: SparkSession,
-    new_rows: DataFrame,
-    state_path: str,
-    tier: str = "1h",
-    group_cols: tuple[str, ...] | list[str] = ("source",),
-    allow_late: bool = False,
-    files: list[str] | None = None,
-) -> DataFrame:
-    """O(delta) incremental maintenance of the HISTOGRAM sketch tier
-    (functions/histsketch.py): same watermark/partition-pruning machinery
-    as the sum tier, with elementwise bin addition as the (exactly
-    associative) merge — batch ≡ incremental bit-for-bit, proven in
-    tests/test_streaming.py."""
-    from ..functions.histsketch import N_BINS, histogram_rollup
+def merge_rollup_increment(spark, new_rows, state_path, **kw) -> DataFrame:
+    return merge_increment(spark, "rollup", new_rows, state_path, **kw)
 
-    group_cols = list(group_cols)
-    inc = histogram_rollup(new_rows, tier, group_cols=group_cols)
 
-    def remerge(union: DataFrame) -> DataFrame:
-        exploded = union.select(
-            *group_cols,
-            "bucket_start",
-            *[F.col("hist")[i].alias(f"_h{i}") for i in range(N_BINS)],
-        )
-        agg = exploded.groupBy(*group_cols, "bucket_start").agg(
-            *[F.sum(f"_h{i}").alias(f"_h{i}") for i in range(N_BINS)]
-        )
-        return agg.select(
-            *group_cols,
-            "bucket_start",
-            F.array(*[F.col(f"_h{i}") for i in range(N_BINS)]).alias("hist"),
-        )
-
-    return _merge_increment(
-        spark, inc, state_path, f"hist_{tier}", group_cols, remerge,
-        allow_late, txn_files=files
-    )
+def merge_histogram_increment(spark, new_rows, state_path, **kw) -> DataFrame:
+    return merge_increment(spark, "hist", new_rows, state_path, **kw)
 
 
 def streaming_rollup(
@@ -441,7 +498,7 @@ def streaming_rollup(
     """Structured Streaming continuous aggregate: parquet file source →
     watermark + event-time window → append-mode parquet sink. Returns the
     StreamingQuery (caller awaits termination)."""
-    window_len = {"1h": "1 hour", "1d": "1 day"}[tier]
+    window_len = f"{tier_seconds(tier)} seconds"
     stream = (
         spark.readStream.schema(schema).format("parquet").load(input_path)
     )
@@ -617,254 +674,6 @@ def streaming_sessionize(
     return writer.start()
 
 
-def merge_distinct_increment(
-    spark: SparkSession,
-    new_rows: DataFrame,
-    state_path: str,
-    tier: str = "1h",
-    group_cols: tuple[str, ...] | list[str] = ("source",),
-    id_col: str = "doc_id",
-    allow_late: bool = False,
-    files: list[str] | None = None,
-) -> DataFrame:
-    """O(delta) incremental maintenance of the EXACT distinct-count tier
-    (functions/distinct.py): the per-bucket sorted distinct id array is the
-    mergeable state, and set union (flatten + distinct + sort) is the
-    exactly associative/commutative/IDEMPOTENT merge — so re-delivered rows
-    (at-least-once upstream) cannot inflate the count, unlike the sum tier.
-    Batch ≡ incremental bit-for-bit (identical SETS, pinned in pytest)."""
-    from ..functions.distinct import distinct_partials
-
-    group_cols = list(group_cols)
-    inc = distinct_partials(new_rows, tier, group_cols=group_cols, id_col=id_col)
-
-    def remerge(union: DataFrame) -> DataFrame:
-        return (
-            union.groupBy(*group_cols, "bucket_start")
-            .agg(
-                F.array_sort(
-                    F.array_distinct(F.flatten(F.collect_list("id_set")))
-                ).alias("id_set")
-            )
-            .withColumn("n_distinct", F.size("id_set").cast("long"))
-        )
-
-    return _merge_increment(
-        spark, inc, state_path, f"distinct_{tier}", group_cols, remerge,
-        allow_late, txn_files=files
-    )
-
-
-_TIER_SECONDS = {"1h": 3600, "1d": 86400, "15m": 900, "1m": 60}
-
-
-def merge_deriv_increment(
-    spark: SparkSession,
-    new_rows: DataFrame,
-    state_path: str,
-    tier: str = "1h",
-    group_cols: tuple[str, ...] | list[str] = ("source",),
-    value_col: str = "n_tok",
-    allow_late: bool = False,
-    files: list[str] | None = None,
-) -> DataFrame:
-    """O(delta) incremental maintenance of the REGRESSION tier
-    (operators/timeseries.py:deriv_partials — the gauge_deriv carrier):
-    state is the five integer sufficient statistics per (group, bucket);
-    the merge is plain integer addition per statistic (t is relative to
-    the bucket start, which is identical across increments of the same
-    tier, so the moments add exactly) — batch ≡ incremental bit-for-bit,
-    and the stored tier cascades to coarser buckets via deriv_from_finer
-    without touching raw. Same watermark + partition-pruned rewrite +
-    roll-forward transaction machinery as the other four carriers."""
-    from ..operators.timeseries import deriv_partials
-
-    group_cols = list(group_cols)
-    inc = deriv_partials(
-        new_rows,
-        _TIER_SECONDS[tier],
-        series_cols=group_cols,
-        value_col=value_col,
-    )
-
-    def remerge(union: DataFrame) -> DataFrame:
-        return union.groupBy(*group_cols, "bucket_start").agg(
-            F.sum("n_samples").alias("n_samples"),
-            F.sum("_st").alias("_st"),
-            F.sum("_sv").alias("_sv"),
-            F.sum("_stv").alias("_stv"),
-            F.sum("_stt").alias("_stt"),
-        )
-
-    return _merge_increment(
-        spark, inc, state_path, f"deriv_{tier}", group_cols, remerge,
-        allow_late, txn_files=files
-    )
-
-
-def merge_changes_increment(
-    spark: SparkSession,
-    new_rows: DataFrame,
-    state_path: str,
-    tier: str = "1h",
-    group_cols: tuple[str, ...] | list[str] = ("source",),
-    value_col: str = "n_tok",
-    id_col: str = "doc_id",
-    allow_late: bool = False,
-    files: list[str] | None = None,
-) -> DataFrame:
-    """O(delta) incremental maintenance of the CHANGES/IRATE carrier tier
-    (operators/timeseries.py:changes_partials — VERDICT r5 Next #5): state
-    is (n_changes, n_samples, first/last/runner-up samples) per (group,
-    bucket); the merge is ``changes_fold``'s ordered-append algebra —
-    Σ changes + boundary comparison + endpoint/top-2 folds. Exact for
-    increments appended in (ts, id) order WITHIN a bucket (the fold
-    REFUSES interleaved same-bucket appends — per-part change counts
-    don't compose across interleaves; this is the sample-granularity
-    analog of the bucket watermark guard). Batch ≡ incremental bit-for-
-    bit under any time-ordered split, pinned in pytest; the stored tier
-    cascades to coarser buckets via ``changes_from_finer``. Same
-    watermark + partition-pruned rewrite + roll-forward transaction
-    machinery as the other five carriers."""
-    from ..operators.timeseries import changes_fold, changes_partials
-
-    group_cols = list(group_cols)
-    inc = changes_partials(
-        new_rows,
-        _TIER_SECONDS[tier],
-        series_cols=group_cols,
-        value_col=value_col,
-        id_col=id_col,
-    )
-
-    def remerge(union: DataFrame) -> DataFrame:
-        return changes_fold(union, group_cols)
-
-    return _merge_increment(
-        spark, inc, state_path, f"changes_{tier}", group_cols, remerge,
-        allow_late, txn_files=files
-    )
-
-
-def merge_topn_increment(
-    spark: SparkSession,
-    new_rows: DataFrame,
-    state_path: str,
-    tier: str = "1h",
-    group_cols: tuple[str, ...] | list[str] = ("source",),
-    key_col: str = "user_id",
-    value_col: str = "n_tok",
-    allow_late: bool = False,
-    files: list[str] | None = None,
-) -> DataFrame:
-    """O(delta) incremental maintenance of the TOP-N carrier tier
-    (operators/timeseries.py:topn_partials — VERDICT r5 Next #8): state
-    is exact integer (value_sum, n_rows) per (group, bucket, key); the
-    merge is plain integer addition (the remerge groups one level finer,
-    per key, like the CMS tier) — batch ≡ incremental bit-for-bit under
-    ANY input split, and ``topn_finalize`` over the stored carrier equals
-    ``topn_rollup`` over raw. Same watermark + partition-pruned rewrite +
-    roll-forward transaction machinery as the other carriers."""
-    from ..operators.timeseries import topn_partials
-
-    group_cols = list(group_cols)
-    inc = topn_partials(
-        new_rows,
-        _TIER_SECONDS[tier],
-        key_col=key_col,
-        series_cols=group_cols,
-        value_col=value_col,
-    )
-
-    def remerge(union: DataFrame) -> DataFrame:
-        return union.groupBy(*group_cols, "bucket_start", key_col).agg(
-            F.sum("value_sum").alias("value_sum"),
-            F.sum("n_rows").alias("n_rows"),
-        )
-
-    return _merge_increment(
-        spark, inc, state_path, f"topn_{tier}", group_cols, remerge,
-        allow_late, txn_files=files
-    )
-
-
-def merge_cms_increment(
-    spark: SparkSession,
-    new_rows: DataFrame,
-    state_path: str,
-    tier: str = "1h",
-    group_cols: tuple[str, ...] | list[str] = ("source",),
-    item_col: str = "doc_id",
-    allow_late: bool = False,
-    files: list[str] | None = None,
-) -> DataFrame:
-    """O(delta) incremental maintenance of the COUNT-MIN sketch tier
-    (functions/cms.py): state is the skinny (group, bucket, r, idx, cnt)
-    rows; the merge is cell-wise counter addition — exactly associative,
-    so batch ≡ incremental bit-for-bit and any split of the input across
-    increments lands on the identical sketch (and therefore identical
-    estimates). Same watermark + partition-pruned rewrite machinery; the
-    remerge just groups one level finer (per cell)."""
-    from ..functions.cms import cms_partials
-
-    group_cols = list(group_cols)
-    inc = cms_partials(new_rows, tier, group_cols=group_cols, item_col=item_col)
-
-    def remerge(union: DataFrame) -> DataFrame:
-        # (d, w) geometry columns are constant groupBy keys — mixed
-        # geometries would stay separate rather than silently co-add,
-        # and cms_estimate rejects mixed state (ADVICE r4)
-        return union.groupBy(
-            *group_cols, "bucket_start", "r", "idx", "d", "w"
-        ).agg(F.sum("cnt").alias("cnt"))
-
-    return _merge_increment(
-        spark, inc, state_path, f"cms_{tier}", group_cols, remerge,
-        allow_late, txn_files=files
-    )
-
-
-def merge_ohlc_increment(
-    spark: SparkSession,
-    new_rows: DataFrame,
-    state_path: str,
-    tier: str = "1h",
-    group_cols: tuple[str, ...] | list[str] = ("source",),
-    value_col: str = "n_tok",
-    id_col: str = "doc_id",
-    allow_late: bool = False,
-    files: list[str] | None = None,
-) -> DataFrame:
-    """O(delta) incremental maintenance of the OHLC/candlestick tier
-    (operators/timeseries.py:ohlc_partials): state is (open, close, high,
-    low, volume, n) per (group, bucket) with open/close carried alongside
-    their (micros, id) order keys; the merge is ``ohlc_from_finer`` at the
-    SAME width (re-bucketing an on-grid bucket_start is the identity, so
-    the fold is exactly the carrier's min_by/max_by/sum algebra) — batch ≡
-    incremental bit-for-bit under ANY input split, because the (ts, id)
-    order key is total. Same watermark + partition-pruned rewrite +
-    roll-forward transaction machinery as the other carriers."""
-    from ..operators.timeseries import ohlc_from_finer, ohlc_partials
-
-    group_cols = list(group_cols)
-    w = _TIER_SECONDS[tier]
-    inc = ohlc_partials(
-        new_rows,
-        w,
-        series_cols=group_cols,
-        value_col=value_col,
-        id_col=id_col,
-    )
-
-    def remerge(union: DataFrame) -> DataFrame:
-        return ohlc_from_finer(union, w, series_cols=group_cols)
-
-    return _merge_increment(
-        spark, inc, state_path, f"ohlc_{tier}", group_cols, remerge,
-        allow_late, txn_files=files
-    )
-
-
 def streaming_ohlc(
     spark: SparkSession,
     input_path: str,
@@ -922,92 +731,3 @@ def streaming_ohlc(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def merge_rate_increment(
-    spark: SparkSession,
-    new_rows: DataFrame,
-    state_path: str,
-    tier: str = "1h",
-    group_cols: tuple[str, ...] | list[str] = ("source",),
-    value_col: str = "n_tok",
-    id_col: str = "doc_id",
-    counter: bool = True,
-    allow_late: bool = False,
-    files: list[str] | None = None,
-) -> DataFrame:
-    """O(delta) incremental maintenance of the PromQL rate/increase
-    carrier tier (operators/timeseries.py:rate_partials): state is the
-    exact within-bucket increase plus first/last samples per (group,
-    bucket); the merge is ``rate_fold``'s ordered-append algebra —
-    Σ increases + one reset-aware boundary contribution per consecutive
-    part pair. Exact for increments appended in (ts, id) order WITHIN a
-    bucket (the fold REFUSES interleaved same-bucket appends, same
-    contract as the changes carrier). Batch ≡ incremental bit-for-bit
-    under any time-ordered split; the stored tier cascades to coarser
-    buckets via ``rate_from_finer`` and finalizes to the extrapolated
-    estimator via ``prom_rate_finalize``. Same watermark +
-    partition-pruned rewrite + roll-forward transaction machinery as the
-    other carriers."""
-    from ..operators.timeseries import rate_fold, rate_partials
-
-    group_cols = list(group_cols)
-    inc = rate_partials(
-        new_rows,
-        _TIER_SECONDS[tier],
-        series_cols=group_cols,
-        value_col=value_col,
-        id_col=id_col,
-        counter=counter,
-    )
-
-    def remerge(union: DataFrame) -> DataFrame:
-        return rate_fold(union, group_cols, counter=counter)
-
-    return _merge_increment(
-        spark, inc, state_path, f"rate_{tier}", group_cols, remerge,
-        allow_late, txn_files=files
-    )
-
-
-def merge_twa_increment(
-    spark: SparkSession,
-    new_rows: DataFrame,
-    state_path: str,
-    tier: str = "1h",
-    group_cols: tuple[str, ...] | list[str] = ("source",),
-    value_col: str = "n_tok",
-    id_col: str = "doc_id",
-    allow_late: bool = False,
-    files: list[str] | None = None,
-) -> DataFrame:
-    """O(delta) incremental maintenance of the time-weighted-average
-    carrier tier (operators/timeseries.py:twa_partials): state is the
-    exact int64 LOCF integral plus first/last samples per (group,
-    bucket); the merge is ``twa_fold``'s ordered-append algebra —
-    Σ integrals + one LOCF boundary segment per consecutive part pair.
-    Exact for increments appended in (ts, id) order WITHIN a bucket (the
-    fold REFUSES interleaved same-bucket appends, same contract as the
-    rate/changes carriers). Batch ≡ incremental bit-for-bit under any
-    time-ordered split; the stored tier cascades to coarser buckets via
-    ``twa_from_finer`` and finalizes via ``twa_finalize``. Same
-    watermark + partition-pruned rewrite + roll-forward transaction
-    machinery as the other carriers."""
-    from ..operators.timeseries import twa_fold, twa_partials
-
-    group_cols = list(group_cols)
-    inc = twa_partials(
-        new_rows,
-        _TIER_SECONDS[tier],
-        series_cols=group_cols,
-        value_col=value_col,
-        id_col=id_col,
-    )
-
-    def remerge(union: DataFrame) -> DataFrame:
-        return twa_fold(union, group_cols)
-
-    return _merge_increment(
-        spark, inc, state_path, f"twa_{tier}", group_cols, remerge,
-        allow_late, txn_files=files
-    )

@@ -13,8 +13,8 @@ at BOTH levels:
   no matter how many runs it took (streaming/stateful.py);
 - the TIER MERGE resumes from PER-STORE merged-files manifests
   (``<work>/state/<store>_files``): each invocation folds ONLY retained
-  files not yet merged into that store (merge_rollup_increment /
-  merge_histogram_increment are exactly associative, so any split of the
+  files not yet merged into that store (``merge_increment`` is exactly
+  associative for every carrier it maintains here, so any split of the
   delta across runs yields bit-equal tiers — streaming/incremental.py).
   Each merge is a roll-forward transaction (staging + intent + replayable
   promote): a kill between store write and manifest write — which used to
@@ -117,14 +117,8 @@ def run_flow(
     """One drain-and-merge round; safe to call repeatedly (both stages are
     resumable, see module docstring). Returns counters for observability."""
     from rasusa_spark.streaming.incremental import (
-        _read_parquet_or_none,
-        merge_cms_increment,
-        merge_deriv_increment,
-        merge_distinct_increment,
-        merge_histogram_increment,
-        merge_ohlc_increment,
-        merge_rollup_increment,
-        merge_topn_increment,
+        merge_increment,
+        read_store,
         recover_pending,
     )
     from rasusa_spark.streaming.stateful import streaming_budget_downsample
@@ -158,14 +152,15 @@ def run_flow(
     all_files = _list_parquet_files(spark, retained)
     legacy_manifest = os.path.join(state, "merged_files")
 
-    def merge_store(store_name: str, merge_fn):
+    def merge_store(kind: str, tier: str, **params):
+        store_name = f"{kind}_{tier}"
         recover_pending(spark, state, store_name)
         manifest_path = os.path.join(state, f"{store_name}_files")
-        manifest = _read_parquet_or_none(spark, manifest_path)
+        manifest = read_store(spark, manifest_path)
         if manifest is None:
             # one-time migration: seed from the pre-r5 global manifest so
             # existing work dirs don't re-merge their whole history
-            legacy = _read_parquet_or_none(spark, legacy_manifest)
+            legacy = read_store(spark, legacy_manifest)
             if legacy is not None:
                 legacy.coalesce(1).write.mode("overwrite").parquet(manifest_path)
                 manifest = spark.read.parquet(manifest_path)
@@ -176,64 +171,25 @@ def run_flow(
         if not new:
             return 0, None
         delta = spark.read.schema(OUT_SCHEMA_FLOW).parquet(*new)
-        return len(new), merge_fn(delta, new)
+        return len(new), merge_increment(
+            spark, kind, delta, state, tier=tier, allow_late=True, files=new,
+            **params,
+        )
 
-    n_new, merged = merge_store(
-        "rollup_1h",
-        lambda d, f: merge_rollup_increment(
-            spark, d, state, tier="1h", allow_late=True, files=f
-        ),
-    )
-    merge_store(
-        "hist_1h",
-        lambda d, f: merge_histogram_increment(
-            spark, d, state, tier="1h", allow_late=True, files=f
-        ),
-    )
-    merge_store(
-        "rollup_1d",
-        lambda d, f: merge_rollup_increment(
-            spark, d, state, tier="1d", allow_late=True, files=f
-        ),
-    )
-    merge_store(
-        "distinct_1h",
-        lambda d, f: merge_distinct_increment(
-            spark, d, state, tier="1h", id_col="doc_id", allow_late=True, files=f
-        ),
-    )
-    merge_store(
-        "cms_1h",
-        lambda d, f: merge_cms_increment(
-            spark, d, state, tier="1h", item_col="doc_id", allow_late=True, files=f
-        ),
-    )
-    merge_store(
-        "deriv_1h",
-        lambda d, f: merge_deriv_increment(
-            spark, d, state, tier="1h", allow_late=True, files=f
-        ),
-    )
-    merge_store(
-        "ohlc_1h",
-        lambda d, f: merge_ohlc_increment(
-            spark, d, state, tier="1h", allow_late=True, files=f
-        ),
-    )
-    merge_store(
-        "topn_1h",
-        lambda d, f: merge_topn_increment(
-            spark, d, state, tier="1h", key_col="doc_id",
-            allow_late=True, files=f,
-        ),
-    )
-    # NOT wired: changes_1h / rate_1h / twa_1h. Those carriers are
+    n_new, merged = merge_store("rollup", "1h")
+    merge_store("hist", "1h")
+    merge_store("rollup", "1d")
+    merge_store("distinct", "1h", id_col="doc_id")
+    merge_store("cms", "1h", item_col="doc_id")
+    merge_store("deriv", "1h")
+    merge_store("ohlc", "1h")
+    merge_store("topn", "1h", key_col="doc_id")
+    # NOT wired: the changes / rate / twa carriers. They are
     # ORDER-SENSITIVE — their folds refuse same-bucket (ts, id)
     # interleaves by contract, and this flow's retained files split
     # buckets arbitrarily (verified: the changes fold refuses here,
     # loudly). Pipelines whose increments arrive in time order maintain
-    # them via merge_changes_increment / merge_rate_increment /
-    # merge_twa_increment directly.
+    # them via merge_increment(kind="changes" | "rate" | "twa") directly.
     merged_buckets = merged.count() if merged is not None else 0
     new_files = n_new
     # 3. optional tier-cascade retention: drop 1h bucket-day partitions
@@ -260,12 +216,8 @@ def run_flow(
         )
 
         recover_pending_dedup(spark, state)
-        from rasusa_spark.streaming.incremental import (
-            _read_parquet_or_none as _rp,
-        )
-
         doc_files = _list_parquet_files_recursive(spark, dedup_input)
-        m = _rp(spark, os.path.join(state, "minhash_files"))
+        m = read_store(spark, os.path.join(state, "minhash_files"))
         seen_docs = {r.path for r in m.collect()} if m is not None else set()
         new_docs = [f for f in doc_files if f not in seen_docs]
         dedup_new = len(new_docs)

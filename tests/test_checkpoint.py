@@ -243,11 +243,11 @@ def test_tier_retention_drops_covered_fine_partitions(spark, raw2k, tmp_path):
         RetentionError,
         apply_tier_retention,
     )
-    from rasusa_spark.streaming.incremental import merge_rollup_increment
+    from rasusa_spark.streaming.incremental import merge_increment
 
     state = str(tmp_path / "tstate")
-    merge_rollup_increment(spark, raw2k, state, tier="1h")
-    merge_rollup_increment(spark, raw2k, state, tier="1d", allow_late=True)
+    merge_increment(spark, "rollup", raw2k, state, tier="1h")
+    merge_increment(spark, "rollup", raw2k, state, tier="1d", allow_late=True)
 
     h1 = spark.read.parquet(f"{state}/rollup_1h")
     days = sorted(
@@ -297,12 +297,12 @@ def test_tier_retention_refuses_uncovered(spark, raw2k, tmp_path):
         RetentionError,
         apply_tier_retention,
     )
-    from rasusa_spark.streaming.incremental import merge_rollup_increment
+    from rasusa_spark.streaming.incremental import merge_increment
 
     state = str(tmp_path / "ustate")
-    merge_rollup_increment(spark, raw2k, state, tier="1h")
-    merge_rollup_increment(
-        spark, raw2k.where(F.col("row_idx") < 500), state, tier="1d",
+    merge_increment(spark, "rollup", raw2k, state, tier="1h")
+    merge_increment(
+        spark, "rollup", raw2k.where(F.col("row_idx") < 500), state, tier="1d",
         allow_late=True,
     )
     h1 = spark.read.parquet(f"{state}/rollup_1h")
@@ -318,89 +318,12 @@ def test_tier_retention_refuses_uncovered(spark, raw2k, tmp_path):
     assert spark.read.parquet(f"{state}/rollup_1h").count() == n_before
 
 
-def test_sketch_tier_retention_distinct_and_cms(spark, raw2k, tmp_path):
-    """Cascade retention for the sketch carriers: distinct 1h day
-    partitions drop once the 1d store holds the exact union SETS (array
-    equality); CMS drops on exact cell equality; a counts-only-equal or
-    partial coarse store refuses."""
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from rasusa_spark.plans.retention import (
-        RetentionError,
-        apply_sketch_tier_retention,
-    )
-    from rasusa_spark.streaming.incremental import (
-        merge_cms_increment,
-        merge_distinct_increment,
-    )
-
-    state = str(tmp_path / "skstate")
-    merge_distinct_increment(spark, raw2k, state, tier="1h")
-    merge_distinct_increment(spark, raw2k, state, tier="1d", allow_late=True)
-    merge_cms_increment(spark, raw2k, state, tier="1h")
-    merge_cms_increment(spark, raw2k, state, tier="1d", allow_late=True)
-
-    h1 = spark.read.parquet(f"{state}/distinct_1h")
-    days = sorted(
-        str(r.bucket_part)
-        for r in h1.select("bucket_part").distinct().collect()
-    )
-    assert len(days) >= 3
-    cd = days[2]
-    cutoff = f"{cd[:4]}-{cd[4:6]}-{cd[6:]} 00:00:00"
-
-    logd = apply_sketch_tier_retention(
-        spark, state, drop_before=cutoff, kind="distinct"
-    )
-    assert {r.source.split("=")[1] for r in logd.collect()} == set(days[:2])
-    left = sorted(
-        str(r.bucket_part)
-        for r in spark.read.parquet(f"{state}/distinct_1h")
-        .select("bucket_part").distinct().collect()
-    )
-    assert left == days[2:]
-
-    logc = apply_sketch_tier_retention(
-        spark, state, drop_before=cutoff, kind="cms"
-    )
-    assert logc.count() == 2
-    # conservation on the CMS carrier: remaining 1h mass + dropped mass
-    # equals the 1d store's mass
-    left_mass = (
-        spark.read.parquet(f"{state}/cms_1h").agg(F.sum("cnt")).first()[0]
-    )
-    dropped_mass = sum(r.n_tok_dropped for r in logc.collect())
-    d1_mass = (
-        spark.read.parquet(f"{state}/cms_1d").agg(F.sum("cnt")).first()[0]
-    )
-    assert left_mass + dropped_mass == d1_mass
-
-    # refusal: a 1d distinct store rebuilt from HALF the data does not
-    # cover the sets -> nothing deleted
-    state2 = str(tmp_path / "skstate2")
-    merge_distinct_increment(spark, raw2k, state2, tier="1h")
-    merge_distinct_increment(
-        spark, raw2k.where(F.col("row_idx") < 500), state2, tier="1d",
-        allow_late=True,
-    )
-    n_before = spark.read.parquet(f"{state2}/distinct_1h").count()
-    with _pytest.raises(RetentionError, match="does not cover"):
-        apply_sketch_tier_retention(
-            spark, state2, drop_before=cutoff, kind="distinct"
-        )
-    assert spark.read.parquet(f"{state2}/distinct_1h").count() == n_before
-
-
 def test_tier_retention_requires_day_aligned_cutoff(spark, tmp_path):
     """ADVICE r4: deletion granularity is the bucket_part DAY partition,
     so a coarse='1h' cutoff that is hour-aligned but mid-day must be
     refused — it would delete whole day directories that still contain
     fine rows >= cutoff. The guard fires before any state is read."""
-    from rasusa_spark.plans.retention import (
-        apply_sketch_tier_retention,
-        apply_tier_retention,
-    )
+    from rasusa_spark.plans.retention import apply_tier_retention
 
     with pytest.raises(ValueError, match="DAY boundary"):
         apply_tier_retention(
@@ -408,7 +331,7 @@ def test_tier_retention_requires_day_aligned_cutoff(spark, tmp_path):
             fine="raw", coarse="1h",
         )
     with pytest.raises(ValueError, match="DAY boundary"):
-        apply_sketch_tier_retention(
+        apply_tier_retention(
             spark, str(tmp_path), drop_before="2026-04-07 07:00:00",
             fine="raw", coarse="1h", kind="distinct",
         )
@@ -418,154 +341,3 @@ def test_tier_retention_requires_day_aligned_cutoff(spark, tmp_path):
             spark, str(tmp_path), drop_before="2026-04-07 00:00:00",
             fine="raw", coarse="1h",
         )
-
-
-def test_sketch_tier_retention_deriv(spark, raw2k, tmp_path):
-    """Cascade retention for the regression carrier: deriv 1h day
-    partitions drop only when the 1d store holds the bit-identical
-    re-based sufficient statistics; a partial coarse store refuses."""
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from rasusa_spark.plans.retention import (
-        RetentionError,
-        apply_sketch_tier_retention,
-    )
-    from rasusa_spark.streaming.incremental import merge_deriv_increment
-
-    state = str(tmp_path / "dstate")
-    merge_deriv_increment(spark, raw2k, state, tier="1h")
-    merge_deriv_increment(spark, raw2k, state, tier="1d", allow_late=True)
-
-    h1 = spark.read.parquet(f"{state}/deriv_1h")
-    days = sorted(
-        str(r.bucket_part)
-        for r in h1.select("bucket_part").distinct().collect()
-    )
-    assert len(days) >= 3
-    cd = days[2]
-    cutoff = f"{cd[:4]}-{cd[4:6]}-{cd[6:]} 00:00:00"
-
-    logd = apply_sketch_tier_retention(
-        spark, state, drop_before=cutoff, kind="deriv"
-    )
-    assert {r.source.split("=")[1] for r in logd.collect()} == set(days[:2])
-    left = sorted(
-        str(r.bucket_part)
-        for r in spark.read.parquet(f"{state}/deriv_1h")
-        .select("bucket_part").distinct().collect()
-    )
-    assert left == days[2:]
-    # conservation: remaining 1h samples + dropped samples == 1d samples
-    left_n = (
-        spark.read.parquet(f"{state}/deriv_1h").agg(F.sum("n_samples")).first()[0]
-    )
-    dropped_n = sum(r.n_tok_dropped for r in logd.collect())
-    d1_n = (
-        spark.read.parquet(f"{state}/deriv_1d").agg(F.sum("n_samples")).first()[0]
-    )
-    assert left_n + dropped_n == d1_n
-
-    # refusal: a 1d store rebuilt from HALF the data mismatches the
-    # re-based statistics -> nothing deleted
-    state2 = str(tmp_path / "dstate2")
-    merge_deriv_increment(spark, raw2k, state2, tier="1h")
-    merge_deriv_increment(
-        spark, raw2k.where(F.col("row_idx") < 500), state2, tier="1d",
-        allow_late=True,
-    )
-    n_before = spark.read.parquet(f"{state2}/deriv_1h").count()
-    with _pytest.raises(RetentionError, match="does not cover"):
-        apply_sketch_tier_retention(
-            spark, state2, drop_before=cutoff, kind="deriv"
-        )
-    assert spark.read.parquet(f"{state2}/deriv_1h").count() == n_before
-
-
-def test_sketch_tier_retention_ohlc_topn_changes(spark, raw2k, tmp_path):
-    """Cascade retention for the round-6 carriers: fine day partitions
-    drop only when the coarse store holds the bit-identical re-rolled
-    carrier; a partial coarse store refuses (null-safe for changes —
-    singleton buckets carry null runner-ups)."""
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from rasusa_spark.plans.retention import (
-        RetentionError,
-        apply_sketch_tier_retention,
-    )
-    from rasusa_spark.streaming.incremental import (
-        merge_changes_increment,
-        merge_ohlc_increment,
-        merge_rate_increment,
-        merge_topn_increment,
-        merge_twa_increment,
-    )
-
-    mergers = {
-        "ohlc": lambda df, st, tier: merge_ohlc_increment(
-            spark, df, st, tier=tier, allow_late=True
-        ),
-        "topn": lambda df, st, tier: merge_topn_increment(
-            spark, df, st, tier=tier, key_col="doc_id", allow_late=True
-        ),
-        "changes": lambda df, st, tier: merge_changes_increment(
-            spark, df, st, tier=tier, allow_late=True
-        ),
-        "rate": lambda df, st, tier: merge_rate_increment(
-            spark, df, st, tier=tier, allow_late=True
-        ),
-        "twa": lambda df, st, tier: merge_twa_increment(
-            spark, df, st, tier=tier, allow_late=True
-        ),
-    }
-    counters = {
-        "ohlc": "n_samples", "topn": "n_rows", "changes": "n_samples",
-        "rate": "n_samples", "twa": "n_samples",
-    }
-    for kind, merge in mergers.items():
-        state = str(tmp_path / f"{kind}_state")
-        merge(raw2k, state, "1h")
-        merge(raw2k, state, "1d")
-        h1 = spark.read.parquet(f"{state}/{kind}_1h")
-        days = sorted(
-            str(r.bucket_part)
-            for r in h1.select("bucket_part").distinct().collect()
-        )
-        assert len(days) >= 3
-        cd = days[2]
-        cutoff = f"{cd[:4]}-{cd[4:6]}-{cd[6:]} 00:00:00"
-        log = apply_sketch_tier_retention(
-            spark, state, drop_before=cutoff, kind=kind, key_col="doc_id"
-        )
-        assert {r.source.split("=")[1] for r in log.collect()} == set(
-            days[:2]
-        ), kind
-        left = sorted(
-            str(r.bucket_part)
-            for r in spark.read.parquet(f"{state}/{kind}_1h")
-            .select("bucket_part").distinct().collect()
-        )
-        assert left == days[2:], kind
-        # conservation: remaining fine counter + dropped == coarse counter
-        c = counters[kind]
-        left_n = (
-            spark.read.parquet(f"{state}/{kind}_1h").agg(F.sum(c)).first()[0]
-        )
-        dropped_n = sum(r.n_tok_dropped for r in log.collect())
-        d1_n = (
-            spark.read.parquet(f"{state}/{kind}_1d").agg(F.sum(c)).first()[0]
-        )
-        assert left_n + dropped_n == d1_n, kind
-
-        # refusal: a coarse store built from HALF the data mismatches
-        state2 = str(tmp_path / f"{kind}_state2")
-        merge(raw2k, state2, "1h")
-        merge(raw2k.where(F.col("row_idx") < 500), state2, "1d")
-        n_before = spark.read.parquet(f"{state2}/{kind}_1h").count()
-        with _pytest.raises(RetentionError, match="does not cover"):
-            apply_sketch_tier_retention(
-                spark, state2, drop_before=cutoff, kind=kind,
-                key_col="doc_id",
-            )
-        assert spark.read.parquet(f"{state2}/{kind}_1h").count() == n_before

@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from rasusa_spark.operators.rollup import rollup
-from rasusa_spark.streaming.incremental import merge_rollup_increment, streaming_rollup
+from rasusa_spark.streaming.incremental import merge_increment, streaming_rollup
 from rasusa_spark.synth import TOKENS_SCHEMA, tokens_raw_df
 
 
@@ -33,8 +33,8 @@ def test_incremental_merge_equals_batch(spark, raw4k, tmp_path):
     state = str(tmp_path / "state")
     first = raw4k.where(F.col("row_idx") < 2000)
     second = raw4k.where(F.col("row_idx") >= 2000)
-    merge_rollup_increment(spark, first, state, tier="1h")
-    merged = merge_rollup_increment(spark, second, state, tier="1h", allow_late=True)
+    merge_increment(spark, "rollup", first, state, tier="1h")
+    merged = merge_increment(spark, "rollup", second, state, tier="1h", allow_late=True)
     batch = rollup(raw4k, "1h")
     assert _rows(merged) == _rows(batch)
 
@@ -52,7 +52,7 @@ def test_incremental_merge_touches_only_changed_partitions(spark, raw4k, tmp_pat
     cut = days[len(days) // 2]
     first = raw4k.where(F.to_date("ts") < F.lit(str(cut)))
     second = raw4k.where(F.to_date("ts") >= F.lit(str(cut)))
-    merge_rollup_increment(spark, first, state, tier="1h")
+    merge_increment(spark, "rollup", first, state, tier="1h")
     store = os.path.join(state, "rollup_1h")
 
     def snapshot():
@@ -63,7 +63,7 @@ def test_incremental_merge_touches_only_changed_partitions(spark, raw4k, tmp_pat
 
     before = snapshot()
     assert before, "first merge wrote no partition files"
-    merged = merge_rollup_increment(spark, second, state, tier="1h")
+    merged = merge_increment(spark, "rollup", second, state, tier="1h")
     after = snapshot()
     untouched = {d.strftime("%Y%m%d") for d in days if d < cut}
     checked = 0
@@ -79,12 +79,12 @@ def test_incremental_merge_touches_only_changed_partitions(spark, raw4k, tmp_pat
 def test_incremental_rejects_late_buckets(spark, raw4k, tmp_path):
     state = str(tmp_path / "state")
     # row_idx split correlates with ts only weakly, so late buckets exist
-    merge_rollup_increment(
-        spark, raw4k.where(F.col("row_idx") < 2000), state, tier="1h"
+    merge_increment(
+        spark, "rollup", raw4k.where(F.col("row_idx") < 2000), state, tier="1h"
     )
     with pytest.raises(ValueError, match="late bucket"):
-        merge_rollup_increment(
-            spark, raw4k.where(F.col("row_idx") >= 2000), state, tier="1h"
+        merge_increment(
+            spark, "rollup", raw4k.where(F.col("row_idx") >= 2000), state, tier="1h"
         )
 
 
@@ -237,14 +237,13 @@ def test_incremental_histogram_merge_equals_batch(spark, raw4k, tmp_path):
     import pytest as _pytest
 
     from rasusa_spark.functions.histsketch import histogram_rollup
-    from rasusa_spark.streaming.incremental import merge_histogram_increment
 
     state = str(tmp_path / "hstate")
     first = raw4k.where(F.col("row_idx") < 2000)
     second = raw4k.where(F.col("row_idx") >= 2000)
-    merge_histogram_increment(spark, first, state, tier="1h")
-    merged = merge_histogram_increment(
-        spark, second, state, tier="1h", allow_late=True
+    merge_increment(spark, "hist", first, state, tier="1h")
+    merged = merge_increment(
+        spark, "hist", second, state, tier="1h", allow_late=True
     )
     batch = histogram_rollup(raw4k, "1h")
     got = sorted(
@@ -256,7 +255,7 @@ def test_incremental_histogram_merge_equals_batch(spark, raw4k, tmp_path):
     assert got == want and len(got) > 0
     # late buckets (behind the per-group watermark) are rejected by default
     with _pytest.raises(ValueError, match="late"):
-        merge_histogram_increment(spark, first, state, tier="1h")
+        merge_increment(spark, "hist", first, state, tier="1h")
 
 
 def test_stream_flow_kill_resume(spark, raw4k, tmp_path):
@@ -359,14 +358,13 @@ def test_incremental_distinct_merge_equals_batch_and_idempotent(
     changes nothing — set union is idempotent, the property the sum tier
     cannot have."""
     from rasusa_spark.functions.distinct import distinct_partials
-    from rasusa_spark.streaming.incremental import merge_distinct_increment
 
     state = str(tmp_path / "dstate")
     first = raw4k.where(F.col("row_idx") < 2000)
     second = raw4k.where(F.col("row_idx") >= 2000)
-    merge_distinct_increment(spark, first, state, tier="1h")
-    merged = merge_distinct_increment(
-        spark, second, state, tier="1h", allow_late=True
+    merge_increment(spark, "distinct", first, state, tier="1h")
+    merged = merge_increment(
+        spark, "distinct", second, state, tier="1h", allow_late=True
     )
     batch = distinct_partials(raw4k, "1h")
     key = lambda df: sorted(
@@ -375,8 +373,8 @@ def test_incremental_distinct_merge_equals_batch_and_idempotent(
     )
     assert key(merged) == key(batch) and len(key(batch)) > 0
     # idempotence under redelivery
-    again = merge_distinct_increment(
-        spark, second, state, tier="1h", allow_late=True
+    again = merge_increment(
+        spark, "distinct", second, state, tier="1h", allow_late=True
     )
     assert key(again) == key(batch)
 
@@ -385,14 +383,13 @@ def test_incremental_cms_merge_equals_batch(spark, raw4k, tmp_path):
     """CMS tier: folding two increments lands on the identical sketch
     cells (cell-wise addition is exactly associative)."""
     from rasusa_spark.functions.cms import cms_partials
-    from rasusa_spark.streaming.incremental import merge_cms_increment
 
     state = str(tmp_path / "cstate")
     first = raw4k.where(F.col("row_idx") < 2000)
     second = raw4k.where(F.col("row_idx") >= 2000)
-    merge_cms_increment(spark, first, state, tier="1h")
-    merged = merge_cms_increment(
-        spark, second, state, tier="1h", allow_late=True
+    merge_increment(spark, "cms", first, state, tier="1h")
+    merged = merge_increment(
+        spark, "cms", second, state, tier="1h", allow_late=True
     )
     batch = cms_partials(raw4k, "1h")
     key = lambda df: sorted(
@@ -977,14 +974,13 @@ def test_incremental_deriv_merge_equals_batch(spark, raw4k, tmp_path):
         _deriv_finalize,
         gauge_deriv,
     )
-    from rasusa_spark.streaming.incremental import merge_deriv_increment
 
     state = str(tmp_path / "state")
     first = raw4k.where(F.col("row_idx") < 2000)
     second = raw4k.where(F.col("row_idx") >= 2000)
-    merge_deriv_increment(spark, first, state, tier="1h")
-    merged = merge_deriv_increment(
-        spark, second, state, tier="1h", allow_late=True
+    merge_increment(spark, "deriv", first, state, tier="1h")
+    merged = merge_increment(
+        spark, "deriv", second, state, tier="1h", allow_late=True
     )
     stats = sorted(
         (r.source, r.bucket_start, r.n_samples, r._st, r._sv, r._stv, r._stt)
@@ -1167,13 +1163,13 @@ def test_empty_increment_txn_never_wedges(spark, raw4k, tmp_path, monkeypatch):
 
     # 1. clean empty-increment merges: into an empty store, then a real
     #    merge, then an empty one into the existing store
-    out = merge_rollup_increment(spark, empty, state, tier="1h", files=["e0"])
+    out = merge_increment(spark, "rollup", empty, state, tier="1h", files=["e0"])
     assert out.count() == 0
-    merge_rollup_increment(
-        spark, raw4k, state, tier="1h", allow_late=True, files=["r1"]
+    merge_increment(
+        spark, "rollup", raw4k, state, tier="1h", allow_late=True, files=["r1"]
     )
-    out = merge_rollup_increment(
-        spark, empty, state, tier="1h", allow_late=True, files=["e2"]
+    out = merge_increment(
+        spark, "rollup", empty, state, tier="1h", allow_late=True, files=["e2"]
     )
     assert _rows(out) == _rows(rollup(raw4k, "1h"))
 
@@ -1188,25 +1184,25 @@ def test_empty_increment_txn_never_wedges(spark, raw4k, tmp_path, monkeypatch):
 
     monkeypatch.setattr(inc_mod, "_txn_promote", boom)
     with pytest.raises(RuntimeError, match="injected"):
-        merge_rollup_increment(spark, empty, state2, tier="1h", files=["x0"])
+        merge_increment(spark, "rollup", empty, state2, tier="1h", files=["x0"])
     monkeypatch.setattr(inc_mod, "_txn_promote", orig)
 
     assert inc_mod.recover_pending(spark, state2, "rollup_1h") is True
     # the manifest recorded x0; the store is usable
-    out = merge_rollup_increment(
-        spark, raw4k, state2, tier="1h", allow_late=True, files=["x1"]
+    out = merge_increment(
+        spark, "rollup", raw4k, state2, tier="1h", allow_late=True, files=["x1"]
     )
     assert _rows(out) == _rows(rollup(raw4k, "1h"))
     with pytest.raises(ValueError, match="already in"):
-        merge_rollup_increment(
-            spark, empty, state2, tier="1h", allow_late=True, files=["x0"]
+        merge_increment(
+            spark, "rollup", empty, state2, tier="1h", allow_late=True, files=["x0"]
         )
 
 
 def test_merge_increment_self_recovers_pending_txn(
     spark, raw4k, tmp_path, monkeypatch
 ):
-    """ADVICE r5 (low): a DIRECT merge_*_increment call after a crash must
+    """ADVICE r5 (low): a DIRECT merge_increment call after a crash must
     roll the pending transaction forward first, not overwrite its
     intent/staging."""
     import rasusa_spark.streaming.incremental as inc_mod
@@ -1222,13 +1218,13 @@ def test_merge_increment_self_recovers_pending_txn(
         lambda *a, **k: (_ for _ in ()).throw(RuntimeError("crash")),
     )
     with pytest.raises(RuntimeError):
-        merge_rollup_increment(spark, first, state, tier="1h", files=["f0"])
+        merge_increment(spark, "rollup", first, state, tier="1h", files=["f0"])
     monkeypatch.setattr(inc_mod, "_txn_promote", orig)
 
     # no manual recover_pending: the next direct merge must self-recover
     # (fold f0's prepared txn forward) and then apply f1 — equaling batch
-    out = merge_rollup_increment(
-        spark, second, state, tier="1h", allow_late=True, files=["f1"]
+    out = merge_increment(
+        spark, "rollup", second, state, tier="1h", allow_late=True, files=["f1"]
     )
     assert _rows(out) == _rows(rollup(raw4k, "1h"))
 
@@ -1239,7 +1235,7 @@ def test_dynamic_overwrite_conf_restored(spark, raw4k, tmp_path):
     key = "spark.sql.sources.partitionOverwriteMode"
     prev = spark.conf.get(key, None)
     state = str(tmp_path / "state")
-    merge_rollup_increment(spark, raw4k, state, tier="1h", files=["f0"])
+    merge_increment(spark, "rollup", raw4k, state, tier="1h", files=["f0"])
     assert spark.conf.get(key, None) == prev
 
 
@@ -1272,16 +1268,15 @@ def test_incremental_changes_merge_equals_batch(spark, raw4k, tmp_path):
     carrier bit-equal to the batch build; interleaved same-bucket appends
     are refused (sample-granularity watermark)."""
     from rasusa_spark.operators.timeseries import changes_partials
-    from rasusa_spark.streaming.incremental import merge_changes_increment
 
     state = str(tmp_path / "state")
     cut = raw4k.agg(F.expr("percentile(unix_micros(ts), 0.5)")).collect()[0][0]
     first = raw4k.where(F.unix_micros("ts") <= cut)
     second = raw4k.where(F.unix_micros("ts") > cut)
 
-    merge_changes_increment(spark, first, state, tier="1h", files=["f0"])
-    merged = merge_changes_increment(
-        spark, second, state, tier="1h", allow_late=True, files=["f1"]
+    merge_increment(spark, "changes", first, state, tier="1h", files=["f0"])
+    merged = merge_increment(
+        spark, "changes", second, state, tier="1h", allow_late=True, files=["f1"]
     )
     batch = changes_partials(raw4k, 3600)
     cols = [
@@ -1295,27 +1290,27 @@ def test_incremental_changes_merge_equals_batch(spark, raw4k, tmp_path):
     # disjoint ranges arriving in REVERSE order still fold exactly (the
     # fold orders parts by first-sample key, not arrival)
     state2 = str(tmp_path / "state2")
-    merge_changes_increment(
-        spark, second, state2, tier="1h", allow_late=True, files=["g0"]
+    merge_increment(
+        spark, "changes", second, state2, tier="1h", allow_late=True, files=["g0"]
     )
-    rev = merge_changes_increment(
-        spark, first, state2, tier="1h", allow_late=True, files=["g1"]
+    rev = merge_increment(
+        spark, "changes", first, state2, tier="1h", allow_late=True, files=["g1"]
     )
     assert key(rev) == key(batch)
 
     # INTERLEAVED same-bucket increments (odd/even rows) must refuse at
     # fold time — per-part change counts don't compose across interleaves
     state3 = str(tmp_path / "state3")
-    merge_changes_increment(
-        spark,
+    merge_increment(
+        spark, "changes",
         raw4k.where(F.col("row_idx") % 2 == 0),
         state3,
         tier="1h",
         files=["h0"],
     )
     with pytest.raises(Exception, match="overlap"):
-        merge_changes_increment(
-            spark,
+        merge_increment(
+            spark, "changes",
             raw4k.where(F.col("row_idx") % 2 == 1),
             state3,
             tier="1h",
@@ -1696,18 +1691,17 @@ def test_incremental_topn_merge_equals_batch(spark, raw4k, tmp_path):
         topn_partials,
         topn_rollup,
     )
-    from rasusa_spark.streaming.incremental import merge_topn_increment
 
     state = str(tmp_path / "state")
     # interleaved split is FINE here (unlike changes): sums are
     # order-independent
     first = raw4k.where(F.col("row_idx") % 2 == 0)
     second = raw4k.where(F.col("row_idx") % 2 == 1)
-    merge_topn_increment(
-        spark, first, state, tier="1h", key_col="doc_id", files=["f0"]
+    merge_increment(
+        spark, "topn", first, state, tier="1h", key_col="doc_id", files=["f0"]
     )
-    merged = merge_topn_increment(
-        spark, second, state, tier="1h", key_col="doc_id",
+    merged = merge_increment(
+        spark, "topn", second, state, tier="1h", key_col="doc_id",
         allow_late=True, files=["f1"],
     )
     batch = topn_partials(raw4k, 3600, key_col="doc_id", series_cols=("source",))
@@ -1733,14 +1727,13 @@ def test_incremental_ohlc_merge_equals_batch(spark, raw4k, tmp_path):
         ohlc_partials,
         ohlc_rollup,
     )
-    from rasusa_spark.streaming.incremental import merge_ohlc_increment
 
     state = str(tmp_path / "state")
     first = raw4k.where(F.col("row_idx") % 2 == 0)
     second = raw4k.where(F.col("row_idx") % 2 == 1)
-    merge_ohlc_increment(spark, first, state, tier="1h", files=["f0"])
-    merged = merge_ohlc_increment(
-        spark, second, state, tier="1h", allow_late=True, files=["f1"]
+    merge_increment(spark, "ohlc", first, state, tier="1h", files=["f0"])
+    merged = merge_increment(
+        spark, "ohlc", second, state, tier="1h", allow_late=True, files=["f1"]
     )
     batch = ohlc_partials(raw4k, 3600)
     key = lambda d: sorted(tuple(r) for r in d.collect())
@@ -1798,7 +1791,6 @@ def test_incremental_rate_merge_equals_batch(spark, raw4k, tmp_path):
         prom_rate_finalize,
         rate_partials,
     )
-    from rasusa_spark.streaming.incremental import merge_rate_increment
 
     state = str(tmp_path / "state")
     us = F.unix_micros(F.col("ts").cast("timestamp"))
@@ -1807,9 +1799,9 @@ def test_incremental_rate_merge_equals_batch(spark, raw4k, tmp_path):
     )
     first = raw4k.where(us <= mid)
     second = raw4k.where(us > mid)
-    merge_rate_increment(spark, first, state, tier="1h", files=["f0"])
-    merged = merge_rate_increment(
-        spark, second, state, tier="1h", allow_late=True, files=["f1"]
+    merge_increment(spark, "rate", first, state, tier="1h", files=["f0"])
+    merged = merge_increment(
+        spark, "rate", second, state, tier="1h", allow_late=True, files=["f1"]
     )
     batch = rate_partials(raw4k, 3600)
     key = lambda d: sorted(tuple(r) for r in d.collect())
@@ -1829,7 +1821,6 @@ def test_incremental_twa_merge_equals_batch(spark, raw4k, tmp_path):
         twa_finalize,
         twa_partials,
     )
-    from rasusa_spark.streaming.incremental import merge_twa_increment
 
     state = str(tmp_path / "state")
     us = F.unix_micros(F.col("ts").cast("timestamp"))
@@ -1838,9 +1829,9 @@ def test_incremental_twa_merge_equals_batch(spark, raw4k, tmp_path):
     )
     first = raw4k.where(us <= mid)
     second = raw4k.where(us > mid)
-    merge_twa_increment(spark, first, state, tier="1h", files=["f0"])
-    merged = merge_twa_increment(
-        spark, second, state, tier="1h", allow_late=True, files=["f1"]
+    merge_increment(spark, "twa", first, state, tier="1h", files=["f0"])
+    merged = merge_increment(
+        spark, "twa", second, state, tier="1h", allow_late=True, files=["f1"]
     )
     batch = twa_partials(raw4k, 3600)
     key = lambda d: sorted(tuple(r) for r in d.collect())
