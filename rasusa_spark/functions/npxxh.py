@@ -28,7 +28,15 @@ for any length. All functions expect ``np.seterr(over="ignore")`` scope
 
 from __future__ import annotations
 
+import sys
+
 import numpy as np
+
+# the kernels read 8-byte words through raw byte-buffer views, which match
+# Spark's little-endian XXH64 reads only on a little-endian host
+if sys.byteorder != "little":
+    raise ImportError("npxxh needs a little-endian host; Spark XXH64 reads "
+                      f"words little-endian, this host is {sys.byteorder}")
 
 P1 = np.uint64(0x9E3779B185EBCA87)
 P2 = np.uint64(0xC2B2AE3D27D4EB4F)

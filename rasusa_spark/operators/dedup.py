@@ -282,6 +282,18 @@ def _prefix_candidates_from_docs(
     return paired.where(ubound >= alpha).select("id_a", "id_b")
 
 
+def _int32_offsets(offs):
+    """int64 ListArray offsets → the int32 offsets ``pa.ListArray`` takes.
+    Raises instead of letting the cast wrap into a corrupt array when one
+    Arrow batch holds more than 2**31 - 1 values."""
+    if offs[-1] > 2**31 - 1:
+        raise OverflowError(
+            f"{int(offs[-1])} list values in one Arrow batch exceed int32 "
+            "ListArray offsets; lower spark.sql.execution.arrow.maxRecordsPerBatch"
+        )
+    return offs.astype("int32")
+
+
 def _gram_sets_kernel(
     df: DataFrame, n: int, text_col: str, id_col: str
 ) -> DataFrame:
@@ -328,7 +340,7 @@ def _gram_sets_kernel(
                 offs = np.zeros(m + 1, dtype=np.int64)
                 offs[1:] = np.cumsum(counts[:m])
                 arr = pa.ListArray.from_arrays(
-                    pa.array(offs.astype(np.int32), pa.int32()),
+                    pa.array(_int32_offsets(offs), pa.int32()),
                     pa.array(fo.view(np.int64), pa.int64()),
                 )
                 yield pa.record_batch(
@@ -781,10 +793,10 @@ def signature_bands(
 ) -> DataFrame:
     """Banded LSH bucket table from a (id, signature) table: one
     (id, band, bucket) row per band, bucket = xxhash64 over the band's
-    slice of the signature. Factored out of ``minhash_lsh_pairs`` so the
-    incremental path (streaming/dedup_inc.py) bands new signatures with
-    the EXACT same expression — bit-equal buckets are what make
-    incremental pairs == batch pairs."""
+    slice of the signature. Factored out of ``minhash_lsh_pairs`` so any
+    caller that bands signatures built elsewhere gets the EXACT same
+    buckets — bit-equal buckets are what make its pairs == the batch
+    pairs."""
     rows_per_band = n_perm // n_bands
     return sigs.select(
         id_col,

@@ -98,8 +98,10 @@ def _bucketed_occurrences(
       ``re.ASCII`` — Java's default ``\\s`` class is ASCII-only and
       Spark ``trim`` strips 0x20 only; empty tokens dropped like the
       JVM ``filter``;
-    - ``str.lower()`` matches UTF8String.toLowerCase (Locale.ROOT full
-      case mapping) on every probed divergence candidate;
+    - ``str.lower()`` matches UTF8String.toLowerCase on every probed
+      divergence candidate while the JVM's default locale lowercases like
+      the root locale (en and C do); under a tr/az default locale 'I'/'İ'
+      lowercase differently and the kernel and JVM forms diverge;
     - bucket: first 4 md5 bytes big-endian mod n_buckets ≡
       ``conv(substring(md5(f),1,8),16,10) % n_buckets``.
 

@@ -230,6 +230,10 @@ def _repetition_features_kernel(
       — NO empty-token filter (a leading tab yields a leading "" token,
       as in the JVM form); Java's default ``\\s`` is ASCII-only →
       ``re.ASCII``;
+    - ``str.lower()`` is Python's locale-free full case mapping; it equals
+      Spark ``lower()`` only while the JVM's default locale lowercases like
+      the root locale (en and C do). Under a tr/az default locale 'I'/'İ'
+      lowercase differently and the kernel and JVM forms diverge;
     - bigram ratios from ``Counter`` over the literal (w[i], w[i+1])
       pairs: dup = occurrences of grams with count ≥ 2; top = max count;
     - null text ⇒ (0.0, 0.0, 0.0) (the JVM ``when`` branches);
@@ -448,7 +452,11 @@ def vocab_stats(
     instead of one row per token OCCURRENCE; the final sum/top-k is
     unchanged. Counts are exact string counts either way — identical by
     test (``test_vocab_kernel_matches_jvm``); Python ``re.ASCII``
-    matches Java's default classes on the BPE pattern. Measured
+    matches Java's default classes on the BPE pattern. The kernel's
+    ``str.lower()`` is Python's locale-free full case mapping; it equals
+    Spark ``lower()`` only while the JVM's default locale lowercases like
+    the root locale (en and C do). Under a tr/az default locale 'I'/'İ'
+    lowercase differently and the kernel and JVM forms diverge. Measured
     same-window at sf1 the full-bench gain is inside noise (1.32 →
     1.25 s — the explode+hash-agg is already map-side combined) while
     the Python boundary costs +0.66 s at sf0.1, so the JVM path stays
@@ -607,6 +615,10 @@ def _gopher_kernel(
     classes), codepoint ``length``, leftmost non-overlapping
     ``regexp_count``, ``like`` prefixes/suffix, double division in the
     same operand order, ``round(x, 6)`` HALF_UP via ``Decimal(repr(x))``.
+    ``str.lower()`` is Python's locale-free full case mapping; it equals
+    Spark ``lower()`` only while the JVM's default locale lowercases like
+    the root locale (en and C do). Under a tr/az default locale 'I'/'İ'
+    lowercase differently and the kernel and JVM forms diverge.
     Null text mirrors the JVM null algebra: n_words/stop_hits/line
     fractions NULL, mean/symbol ratios 0.0, ``kept`` False (0.0 always
     fails ``min_mean_word_len`` ≥ 3 — asserted so a permissive threshold

@@ -623,10 +623,10 @@ def sessionize(
     belong together are processed together, SURVEY §2.6).
 
     Spark-first: this IS the built-in ``F.session_window`` aggregation
-    (JVM-side session assignment, map-side combinable, identical semantics
-    in batch and Structured Streaming) — no window-lag + cumsum re-derivation
-    needed. One shuffle on ``user_col``; session merging happens inside the
-    aggregate, so the 100-TB shape is a single (user)-keyed exchange.
+    (JVM-side session assignment, map-side combinable) — no window-lag +
+    cumsum re-derivation needed. One shuffle on ``user_col``; session
+    merging happens inside the aggregate, so the 100-TB shape is a single
+    (user)-keyed exchange.
 
     Output: one row per (user, session) with ``session_start`` (min ts),
     ``session_end`` (max ts), ``n_events``, ``duration_s`` (integer seconds,
@@ -1738,11 +1738,11 @@ def rollup_sliding(
     """Sliding (hopping) window aggregate — the moving-average tier
     ``date_trunc``/``time_bucket`` can't express: every ``slide_s`` seconds
     emit the aggregate of the trailing ``width_s`` window. This is Spark's
-    built-in ``F.window(ts, width, slide)`` (epoch-aligned window starts,
-    identical batch and Structured Streaming semantics): each row lands in
-    exactly ``width/slide`` windows, assigned JVM-side — no self-join, no
-    range join; the one shuffle is the (group, window) groupBy, with
-    map-side partials exactly like every fixed-width tier.
+    built-in ``F.window(ts, width, slide)`` (epoch-aligned window
+    starts): each row lands in exactly ``width/slide`` windows, assigned
+    JVM-side — no self-join, no range join; the one shuffle is the
+    (group, window) groupBy, with map-side partials exactly like every
+    fixed-width tier.
 
     ``width_s`` must be a positive multiple of ``slide_s`` (the windows
     containing a row are then ``floor(ts/slide)*slide - k*slide`` for

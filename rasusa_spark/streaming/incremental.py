@@ -1,29 +1,25 @@
-"""Incremental tier maintenance + Structured Streaming ingestion
-(SURVEY §2.10; north_rule: "continuous aggregates", "bucket watermarks").
+"""Incremental tier maintenance (SURVEY §2.10; north_rule: "continuous
+aggregates", "bucket watermarks").
 
-Two complementary paths:
+``merge_increment`` — batch-incremental continuous-aggregate maintenance
+for every mergeable tier carrier: build the carrier's partial state from
+ONLY the new rows, then merge it into the stored ``{kind}_{tier}`` store
+by re-rolling the union of the touched stored rows and the increment with
+the carrier's ``from_finer`` at the SAME tier (re-bucketing an on-grid
+``bucket_start`` is the identity, so the re-roll is exactly the carrier's
+associative merge). Buckets older than the stored watermark are rejected
+as late (the engine analog of the reference's ordered-input guard,
+source.rs:57-116) or accepted when ``allow_late`` (they merge exactly,
+since the merge is associative).
 
-- ``merge_increment`` — batch-incremental continuous-aggregate
-  maintenance for every mergeable tier carrier: build the carrier's
-  partial state from ONLY the new rows, then merge it into the stored
-  ``{kind}_{tier}`` store by re-rolling the union of the touched stored
-  rows and the increment with the carrier's ``from_finer`` at the SAME
-  tier (re-bucketing an on-grid ``bucket_start`` is the identity, so the
-  re-roll is exactly the carrier's associative merge). Buckets older than
-  the stored watermark are rejected as late (the engine analog of the
-  reference's ordered-input guard, source.rs:57-116) or accepted when
-  ``allow_late`` (they merge exactly, since the merge is associative).
-
-  The store is hive-partitioned by bucket day; a merge reads and rewrites
-  ONLY the partitions its increment touches (dynamic partition overwrite —
-  the same pattern plans/checkpoint.py uses), so the I/O is O(delta), not
-  O(store). The per-group watermark lives in a compact side table instead
-  of being re-derived from a full store scan.
-
-- ``streaming_rollup`` — true Structured Streaming: file-source readStream →
-  event-time window aggregate with a watermark → parquet/memory sink.
-  At cluster scale the same query runs against Kafka/Iceberg sources
-  unchanged; state-store handles the open buckets.
+The store is hive-partitioned by bucket day; a merge reads and rewrites
+ONLY the partitions its increment touches (dynamic partition overwrite —
+the same pattern plans/checkpoint.py uses), so the I/O is O(delta), not
+O(store). The per-group watermark lives in a compact side table instead
+of being re-derived from a full store scan. With ``files`` the merge is a
+crash-safe stage → intent → promote transaction; ``recover_pending``
+rolls an interrupted one forward at the start of the next merge on either
+path.
 
 The carrier table ``CARRIERS`` drives ``merge_increment`` here and
 ``plans/retention.apply_tier_retention``. Each entry: kind (= store
@@ -52,7 +48,6 @@ from __future__ import annotations
 
 import contextlib
 import os
-import re
 from dataclasses import dataclass
 from typing import Callable
 
@@ -67,26 +62,7 @@ from ..functions.histsketch import histogram_rollup, histogram_rollup_from_finer
 from ..operators import timeseries as ts
 from ..operators.rollup import rollup, rollup_from_finer, tier_seconds
 
-_AGGS = ["n_tok_sum", "row_count", "n_tok_min", "n_tok_max"]
 _PART = "bucket_part"  # hive partition column: day of bucket_start
-
-_INTERVAL_UNIT_S = {
-    "second": 1, "minute": 60, "hour": 3600, "day": 86400, "week": 604800,
-}
-
-
-def interval_seconds(width: str) -> int:
-    """Parse a Spark interval string ('15 minutes', '1 hour') to whole
-    seconds. Raises ValueError (not a bare KeyError, ADVICE r5) for any
-    form ``F.window`` would reject or that this module can't bucket."""
-    m = re.fullmatch(r"\s*(\d+)\s+(second|minute|hour|day|week)s?\s*",
-                     str(width).lower())
-    if not m:
-        raise ValueError(
-            f"unsupported window width {width!r}: expected '<n> "
-            "second[s]|minute[s]|hour[s]|day[s]|week[s]'"
-        )
-    return int(m.group(1)) * _INTERVAL_UNIT_S[m.group(2)]
 
 
 @contextlib.contextmanager
@@ -265,17 +241,18 @@ def _merge_increment(
     either leaves the store/manifest pair untouched (pre-intent) or is
     rolled forward exactly once by ``recover_pending`` — never a partial
     state that re-merges the same file into a non-idempotent carrier."""
-    if txn_files is not None:
-        if not txn_files:
-            raise ValueError(
-                "txn merge called with an empty file list — nothing to "
-                "fold; list new files first (the no-op has no intent to "
-                "record)"
-            )
-        # a crashed prior transaction must roll forward BEFORE this merge
-        # reads the watermark/manifest (ADVICE r5: direct callers of
-        # merge_*_increment previously clobbered a pending intent)
-        recover_pending(spark, state_path, store_name)
+    if txn_files is not None and not txn_files:
+        raise ValueError(
+            "txn merge called with an empty file list — nothing to "
+            "fold; list new files first (the no-op has no intent to "
+            "record)"
+        )
+    # a crashed prior transaction must roll forward BEFORE this merge
+    # reads the watermark/manifest, on BOTH paths: a plain merge that
+    # skipped it would write over partitions that the pending intent's
+    # stale staging later replays over (driver-side FS checks only when
+    # no intent exists — no Spark job)
+    recover_pending(spark, state_path, store_name)
     inc = inc.persist()
     store = os.path.join(state_path, store_name)
     wm_path = os.path.join(state_path, f"{store_name}_wm")
@@ -482,252 +459,3 @@ def merge_rollup_increment(spark, new_rows, state_path, **kw) -> DataFrame:
 
 def merge_histogram_increment(spark, new_rows, state_path, **kw) -> DataFrame:
     return merge_increment(spark, "hist", new_rows, state_path, **kw)
-
-
-def streaming_rollup(
-    spark: SparkSession,
-    input_path: str,
-    checkpoint_path: str,
-    output_path: str,
-    schema,
-    tier: str = "1h",
-    group_cols: tuple[str, ...] | list[str] = ("source",),
-    watermark: str = "2 hours",
-    available_now: bool = True,
-):
-    """Structured Streaming continuous aggregate: parquet file source →
-    watermark + event-time window → append-mode parquet sink. Returns the
-    StreamingQuery (caller awaits termination)."""
-    window_len = f"{tier_seconds(tier)} seconds"
-    stream = (
-        spark.readStream.schema(schema).format("parquet").load(input_path)
-    )
-    agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(*group_cols, F.window("ts", window_len).alias("w"))
-        .agg(
-            F.sum(F.col("n_tok").cast("long")).alias("n_tok_sum"),
-            F.count(F.lit(1)).alias("row_count"),
-            F.min("n_tok").alias("n_tok_min"),
-            F.max("n_tok").alias("n_tok_max"),
-        )
-        .select(*group_cols, F.col("w.start").alias("bucket_start"), *_AGGS)
-    )
-    writer = (
-        agg.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def streaming_sliding_rollup(
-    spark: SparkSession,
-    input_path: str,
-    checkpoint_path: str,
-    output_path: str,
-    schema,
-    width: str = "1 hour",
-    slide: str = "15 minutes",
-    group_cols: tuple[str, ...] | list[str] = ("source",),
-    watermark: str = "2 hours",
-    available_now: bool = True,
-):
-    """Structured Streaming sliding (hopping) window aggregate — the
-    streaming twin of operators/timeseries.rollup_sliding (identical
-    F.window(width, slide) semantics, so batch ≡ streaming on a drained
-    input; pinned in pytest with the same flush-row technique as
-    sessionize)."""
-    stream = (
-        spark.readStream.schema(schema).format("parquet").load(input_path)
-    )
-    agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(*group_cols, F.window("ts", width, slide).alias("_w"))
-        .agg(
-            F.sum(F.col("n_tok").cast("long")).alias("n_tok_sum"),
-            F.count(F.lit(1)).alias("row_count"),
-        )
-        .select(
-            *group_cols,
-            F.col("_w.start").alias("window_start"),
-            F.col("_w.end").alias("window_end"),
-            "n_tok_sum",
-            "row_count",
-        )
-    )
-    writer = (
-        agg.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def streaming_gauge_delta(
-    spark: SparkSession,
-    input_path: str,
-    checkpoint_path: str,
-    output_path: str,
-    schema,
-    width: str = "1 hour",
-    group_cols: tuple[str, ...] | list[str] = ("source",),
-    id_col: str = "doc_id",
-    value_col: str = "n_tok",
-    watermark: str = "2 hours",
-    available_now: bool = True,
-):
-    """Structured Streaming twin of operators/timeseries.gauge_delta: the
-    same ``min_by``/``max_by`` on the (ts, id) order key inside a
-    watermarked event-time window — the endpoint carriers are ordinary
-    declarative aggregates, so the engine maintains them incrementally
-    across micro-batches and batch ≡ streaming on a drained input
-    (pinned in pytest with the flush-row technique). Epoch-aligned
-    ``F.window`` boundaries coincide with the batch time_bucket origin
-    for widths that divide a day (both are midnight-anchored)."""
-    width_s = interval_seconds(width)  # ValueError before the stream starts
-    stream = (
-        spark.readStream.schema(schema).format("parquet").load(input_path)
-    )
-    v = F.col(value_col).cast("long")
-    okey = F.struct(
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("u"),
-        F.col(id_col).alias("i"),
-    )
-    agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(*group_cols, F.window("ts", width).alias("_w"))
-        .agg(
-            F.min_by(v, okey).alias("v_first"),
-            F.max_by(v, okey).alias("v_last"),
-            F.count(F.lit(1)).alias("n_samples"),
-        )
-        .select(
-            *group_cols,
-            F.col("_w.start").alias("bucket_start"),
-            "v_first",
-            "v_last",
-            (F.col("v_last") - F.col("v_first")).alias("delta"),
-            "n_samples",
-            (
-                (F.col("v_last") - F.col("v_first")).cast("double")
-                / F.lit(float(width_s))
-            ).alias("rate_per_s"),
-        )
-    )
-    writer = (
-        agg.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def streaming_sessionize(
-    spark: SparkSession,
-    input_path: str,
-    checkpoint_path: str,
-    output_path: str,
-    schema,
-    gap: str = "30 minutes",
-    user_col: str = "source",
-    watermark: str = "2 hours",
-    available_now: bool = True,
-):
-    """Structured Streaming sessionization: the SAME ``F.session_window``
-    aggregate operators/timeseries.sessionize uses in batch, as a
-    watermarked streaming query (append mode — a session emits once its
-    window can no longer grow, i.e. watermark passes session end + gap).
-    Batch ≡ streaming on a drained (availableNow) input is pinned in
-    pytest — the point of building sessionize on the built-in operator
-    instead of a window/lag re-derivation."""
-    stream = (
-        spark.readStream.schema(schema).format("parquet").load(input_path)
-    )
-    agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.col(user_col), F.session_window("ts", gap).alias("_sw"))
-        .agg(
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-        .drop("_sw")
-    )
-    writer = (
-        agg.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def streaming_ohlc(
-    spark: SparkSession,
-    input_path: str,
-    checkpoint_path: str,
-    output_path: str,
-    schema,
-    width: str = "1 hour",
-    group_cols: tuple[str, ...] | list[str] = ("source",),
-    id_col: str = "doc_id",
-    value_col: str = "n_tok",
-    watermark: str = "2 hours",
-    available_now: bool = True,
-):
-    """Structured Streaming twin of operators/timeseries.ohlc_rollup: the
-    same ``min_by``/``max_by`` candlestick aggregates on the (ts, id)
-    order key inside a watermarked event-time window — declarative
-    aggregates the engine maintains incrementally across micro-batches,
-    so batch ≡ streaming on a drained input (pinned in pytest). Same
-    epoch-alignment argument as streaming_gauge_delta."""
-    interval_seconds(width)  # ValueError before the stream starts
-    stream = (
-        spark.readStream.schema(schema).format("parquet").load(input_path)
-    )
-    v = F.col(value_col).cast("long")
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    okey = F.struct(us.alias("u"), F.col(id_col).alias("i"))
-    agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(*group_cols, F.window("ts", width).alias("_w"))
-        .agg(
-            F.min_by(v, okey).alias("v_open"),
-            F.max(v).alias("v_high"),
-            F.min(v).alias("v_low"),
-            F.max_by(v, okey).alias("v_close"),
-            F.sum(v).alias("volume"),
-            F.count(F.lit(1)).alias("n_samples"),
-        )
-        .select(
-            *group_cols,
-            F.col("_w.start").alias("bucket_start"),
-            "v_open",
-            "v_high",
-            "v_low",
-            "v_close",
-            "volume",
-            "n_samples",
-        )
-    )
-    writer = (
-        agg.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

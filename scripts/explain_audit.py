@@ -380,57 +380,6 @@ def main() -> None:
              sel.withColumn("user_id", F.col("doc_id")))))
     )
 
-    # incremental dedup store probe: write a tiny store, then show the
-    # shard PartitionFilters pruning on the stored-bands read
-    from rasusa_spark.streaming.dedup_inc import merge_minhash_increment
-
-    docs_loc = "/tmp/rasusa_plan_audit_docs"
-    ded_state = "/tmp/rasusa_plan_audit_dedup"
-    import shutil
-
-    shutil.rmtree(ded_state, ignore_errors=True)
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    shutil.rmtree(docs_loc, ignore_errors=True)
-    docs.coalesce(1).write.parquet(docs_loc)
-    import glob as _glob
-
-    dfiles = sorted(_glob.glob(f"{docs_loc}/*.parquet"))
-    merge_minhash_increment(spark, docs, ded_state, files=dfiles)
-    stored = spark.read.parquet(os.path.join(ded_state,
-                                             "minhash_store", "bands"))
-    probe = stored.where(F.col("shard").isin([0, 1, 2, 3])).groupBy(
-        "band", "bucket"
-    ).count()
-    sections.append(
-        ("incremental dedup store probe (bands/txn=*/shard=* layout: the "
-         "new-batch band join reads ONLY touched shards — look for "
-         "PartitionFilters on `shard`)",
-         grab(probe))
-    )
-
-    # incremental IVF store probe: pinned-codebook store, search prunes
-    # on the ivf_cell partition column across all txn directories
-    from rasusa_spark.streaming.ann_inc import (
-        ivf_store_topk,
-        merge_ivf_increment,
-    )
-
-    ivf_state = "/tmp/rasusa_plan_audit_ivf"
-    shutil.rmtree(ivf_state, ignore_errors=True)
-    embs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    emb_loc = "/tmp/rasusa_plan_audit_embs"
-    shutil.rmtree(emb_loc, ignore_errors=True)
-    embs.coalesce(1).write.parquet(emb_loc)
-    efiles = sorted(_glob.glob(f"{emb_loc}/*.parquet"))
-    merge_ivf_increment(spark, embs, ivf_state, files=efiles)
-    dim = len(embs.select("embedding").first()[0])
-    sections.append(
-        ("incremental IVF store probe (cells/txn=*/ivf_cell=* layout: "
-         "search reads ONLY the nprobe probed cells — look for "
-         "PartitionFilters on `ivf_cell`)",
-         grab(ivf_store_topk(spark, ivf_state, [1.0] * dim, nprobe=3)))
-    )
-
     # round-6 operators
     from rasusa_spark.operators.mix import mix_corpus
     from rasusa_spark.operators.rollup import realtime_rollup

@@ -201,3 +201,112 @@ def test_read_store_absent_empty_and_corrupt(spark, tmp_path):
         read_store(spark, str(tmp_path / "corrupt")).collect()
     with pytest.raises(Exception):
         read_commit_log(spark, str(tmp_path / "ck")).collect()
+
+
+def _thirds(df):
+    """Three time-ordered parts of ``df``, split at ts tertiles."""
+    q1, q2 = df.agg(
+        F.expr("percentile(unix_micros(ts), array(1D / 3, 2D / 3))")
+    ).first()[0]
+    us = F.unix_micros("ts")
+    return df.where(us <= q1), df.where((us > q1) & (us <= q2)), df.where(us > q2)
+
+
+def _stored(spark, path):
+    # columns by name: the read-back order depends on which part file's
+    # footer Spark samples
+    df = spark.read.parquet(path)
+    return _key(df, sorted(df.columns))
+
+
+def _paths(spark, path):
+    return {r.path for r in spark.read.parquet(path).collect()}
+
+
+def _crash_promote(monkeypatch, inc_mod, spark, kind, part, state, files):
+    """Run a transaction merge whose promote dies after the intent
+    commits; the prepared transaction is left on disk."""
+    real = inc_mod._txn_promote
+
+    def dying(*a):
+        raise RuntimeError("injected crash before promote")
+
+    monkeypatch.setattr(inc_mod, "_txn_promote", dying)
+    with pytest.raises(RuntimeError, match="injected"):
+        merge_increment(spark, kind, part, state, allow_late=True, files=files)
+    monkeypatch.setattr(inc_mod, "_txn_promote", real)
+    assert os.path.exists(f"{state}/{kind}_1h_txn_intent/_SUCCESS")
+    assert read_store(spark, f"{state}/{kind}_1h") is None
+
+
+@pytest.mark.parametrize("kind", ["rollup", "hist", "cms", "distinct"])
+def test_txn_merge_crash_contract(spark, raw2k, tmp_path, monkeypatch, kind):
+    """The transaction merge's crash contract, on the non-idempotent
+    carriers and distinct: (a) a promote that dies for f1 is rolled
+    forward exactly once by the next merge (of f2); (b) a cleanup skipped
+    after f2 leaves its intent, which the next merge (of f3) replays
+    idempotently. Store, watermark and file manifest then equal an
+    uncrashed run, the store equals the batch partials, and re-sending a
+    merged file is refused."""
+    import rasusa_spark.streaming.incremental as inc_mod
+
+    parts = _thirds(raw2k)
+    ref, state = str(tmp_path / "ref"), str(tmp_path / "state")
+    for i, part in enumerate(parts, 1):
+        merge_increment(spark, kind, part, ref, allow_late=True, files=[f"f{i}"])
+    store = f"{state}/{kind}_1h"
+
+    _crash_promote(monkeypatch, inc_mod, spark, kind, parts[0], state, ["f1"])
+
+    real_cleanup = inc_mod._txn_cleanup
+
+    def skip_f2_cleanup(spark_, state_path, store_name):
+        intent = os.path.join(state_path, f"{store_name}_txn_intent")
+        if os.path.exists(intent) and _paths(spark_, intent) == {"f2"}:
+            return  # dies after promote, before the intent is deleted
+        real_cleanup(spark_, state_path, store_name)
+
+    monkeypatch.setattr(inc_mod, "_txn_cleanup", skip_f2_cleanup)
+    merge_increment(spark, kind, parts[1], state, allow_late=True, files=["f2"])
+    monkeypatch.setattr(inc_mod, "_txn_cleanup", real_cleanup)
+    assert _paths(spark, f"{store}_txn_intent") == {"f2"}
+    assert _paths(spark, f"{store}_files") == {"f1", "f2"}
+
+    merge_increment(spark, kind, parts[2], state, allow_late=True, files=["f3"])
+    assert not os.path.exists(f"{store}_txn_intent")
+    for suffix in ("", "_wm", "_files"):
+        assert _stored(spark, f"{store}{suffix}") == _stored(
+            spark, f"{ref}/{kind}_1h{suffix}"
+        ), f"{kind}_1h{suffix} diverged from the uncrashed run"
+    batch = CARRIERS[kind].partials(raw2k, "1h", ["source"])
+    assert _key(spark.read.parquet(store), batch.columns) == _key(
+        batch, batch.columns
+    )
+    with pytest.raises(ValueError, match="already in"):
+        merge_increment(spark, kind, parts[1], state, allow_late=True, files=["f2"])
+
+
+def test_plain_merge_rolls_pending_txn_forward(spark, raw2k, tmp_path, monkeypatch):
+    """A merge without ``files`` on a store whose transaction died before
+    its promote must roll that transaction forward first: otherwise the
+    plain merge ignores the pending rows, and the next transaction merge
+    replays the stale staging over the partitions it wrote."""
+    import rasusa_spark.streaming.incremental as inc_mod
+
+    parts = _thirds(raw2k)
+    state = str(tmp_path / "state")
+    store = f"{state}/rollup_1h"
+    c = CARRIERS["rollup"]
+    _crash_promote(monkeypatch, inc_mod, spark, "rollup", parts[0], state, ["f1"])
+
+    merge_increment(spark, "rollup", parts[1], state, allow_late=True)
+    batch = c.partials(parts[0].unionByName(parts[1]), "1h", ["source"])
+    assert _key(spark.read.parquet(store), batch.columns) == _key(
+        batch, batch.columns
+    )
+
+    merge_increment(spark, "rollup", parts[2], state, allow_late=True, files=["f3"])
+    batch = c.partials(raw2k, "1h", ["source"])
+    assert _key(spark.read.parquet(store), batch.columns) == _key(
+        batch, batch.columns
+    )

@@ -269,6 +269,18 @@ def test_block_sparse_string_ids(spark, docs):
     assert all(x < y for x, y, _ in a)
 
 
+def test_gram_set_offsets_refuse_int32_overflow():
+    """The gram-set kernel's ListArray offsets are int32: a batch whose
+    value count passes 2**31 - 1 raises instead of wrapping."""
+    from rasusa_spark.operators.dedup import _int32_offsets
+
+    offs = np.array([0, 5, 2**31 - 1], dtype=np.int64)
+    out = _int32_offsets(offs)
+    assert out.dtype == np.int32 and out.tolist() == offs.tolist()
+    with pytest.raises(OverflowError, match="int32"):
+        _int32_offsets(np.array([0, 2**31 - 1, 2**31], dtype=np.int64))
+
+
 def test_prefix_filter_skew_guard(spark):
     """A stop-shingle present in EVERY doc must not blow up the prefix
     join: rarest-first ordering puts it past the prefix cut, so candidate
