@@ -133,7 +133,7 @@ def run_downsample_job(
 
     # data first (idempotent via dynamic partition overwrite), commits second;
     # the partition key is the commit unit itself (see module docstring)
-    from ..streaming.incremental import _dynamic_overwrite
+    from ..session import dynamic_overwrite
 
     out = kept.withColumn(
         "bucket_id", F.date_format("bucket_start", "yyyyMMdd'T'HHmmss")
@@ -142,7 +142,7 @@ def run_downsample_job(
         out = out.repartition("source", "bucket_id").sortWithinPartitions(
             "source", "bucket_id", order_col
         )
-    with _dynamic_overwrite(spark):
+    with dynamic_overwrite(spark):
         out.write.mode("overwrite").partitionBy("source", "bucket_id").parquet(
             os.path.join(output_path, "retained")
         )

@@ -19,9 +19,14 @@ Mechanics:
   RetentionError, nothing deleted;
 - deletion goes through the Hadoop FileSystem API (works on local paths
   here and on HDFS/S3A on a real cluster — never ``shutil``);
-- every dropped partition is appended to a ``retention`` log next to the
-  commit log, carrying (source, bucket_start, rows/tokens dropped,
-  run id) — the lineage story stays complete after the raw rows are gone.
+- every partition about to be dropped is appended to a ``retention`` log
+  next to the commit log BEFORE the delete, carrying (source,
+  bucket_start, rows/tokens dropped, run id) — the lineage story stays
+  complete after the raw rows are gone. A rerun after a kill between the
+  append and the delete reads the log filtered to the doomed buckets and
+  skips the rows already there, so each dropped bucket is logged once.
+  The log rows are written on the driver (pyarrow through the Hadoop FS),
+  not through a Spark job.
 
 Tier-cascade retention (``apply_tier_retention(kind=…)``) applies the same
 covered-drop contract to the fine tier of every mergeable carrier in
@@ -36,22 +41,89 @@ scripts/run_job.py (`retained/` + `rollup_{raw,1h,1d}/`).
 from __future__ import annotations
 
 import os
+import uuid
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..operators.rollup import rollup, tier_unit
-from ..streaming.incremental import _PART, _fs, carrier
+from ..streaming.incremental import _PART, _fs, carrier, parquet_bytes, put_file
 
-RETENTION_SCHEMA = (
-    "run_id string, source string, bucket_start timestamp, "
-    "rows_dropped long, n_tok_dropped long, tier string"
-)
+# the retention log as the driver writes it; Spark reads it as
+# RETENTION_SCHEMA (bucket_start: timestamp)
+_LOG_ARROW = pa.schema([
+    ("run_id", pa.string()),
+    ("source", pa.string()),
+    ("bucket_start", pa.timestamp("us", tz="UTC")),
+    ("rows_dropped", pa.int64()),
+    ("n_tok_dropped", pa.int64()),
+    ("tier", pa.string()),
+])
+RETENTION_SCHEMA = from_arrow_schema(_LOG_ARROW)
 
 
 class RetentionError(RuntimeError):
     """The coarser tier does not cover the span requested for dropping."""
+
+
+def _log_frame(spark: SparkSession, rows: list[tuple]) -> DataFrame:
+    """Retention-log rows (``bucket_start`` as epoch micros) as an
+    Arrow-backed frame: built in the JVM, no Python worker round trip."""
+    return spark.createDataFrame(_log_table(rows))
+
+
+def _log_table(rows: list[tuple]) -> pa.Table:
+    cols = list(zip(*rows)) if rows else [()] * len(_LOG_ARROW)
+    return pa.table(
+        [
+            pa.array(c, pa.int64()).cast(f.type) if f.name == "bucket_start"
+            else pa.array(c, f.type)
+            for c, f in zip(cols, _LOG_ARROW)
+        ],
+        schema=_LOG_ARROW,
+    )
+
+
+def _log_once(
+    spark: SparkSession, log_path: str, rows: list[tuple], logged: Column
+) -> DataFrame:
+    """Append the log ``rows`` of the partitions about to be dropped,
+    skipping those already in the log (a killed earlier call appended
+    them but deleted nothing). ``logged`` filters the log to the doomed
+    buckets. Returns all ``rows`` as a frame."""
+    fs, jpath = _fs(spark, log_path)
+    new = rows
+    if fs.exists(jpath):
+        have = {
+            tuple(r)
+            for r in spark.read.schema(RETENTION_SCHEMA)
+            .parquet(log_path)
+            .where(logged)
+            .select(
+                "source", F.unix_micros("bucket_start"), "rows_dropped",
+                "n_tok_dropped", "tier",
+            )
+            .collect()
+        }
+        new = [r for r in rows if r[1:] not in have]
+    if new:
+        put_file(
+            spark, os.path.join(log_path, f"part-{uuid.uuid4().hex}.parquet"),
+            parquet_bytes(_log_table(new)),
+        )
+    return _log_frame(spark, rows)
+
+
+def _drop_partitions(spark: SparkSession, root: str, parts: list[str]) -> None:
+    """Delete partition directories (relative to ``root``) through the
+    Hadoop FS (storage-agnostic)."""
+    fs, _ = _fs(spark, root)
+    jvm_path = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
+    for part in parts:
+        fs.delete(jvm_path(os.path.join(root, part)), True)
 
 
 def _check_cutoff_alignment(
@@ -92,8 +164,9 @@ def apply_retention(
 ) -> DataFrame:
     """Drop retained raw partitions with ``bucket_start < drop_before``
     (ISO timestamp string), verifying coverage against the stored
-    ``rollup_{tier}`` first. Returns the retention-log rows written by this
-    invocation (empty if nothing qualified).
+    ``rollup_{tier}`` first. Returns the retention-log rows of the
+    partitions this invocation drops (empty if nothing qualified); each is
+    appended to the log before its partition is deleted, once.
 
     ``force=True`` skips the coverage check — for operators that have
     already exported the span elsewhere. The check otherwise requires
@@ -112,10 +185,11 @@ def apply_retention(
             F.count(F.lit(1)).alias("rows_dropped"),
             F.sum(F.col("n_tok").cast("long")).alias("n_tok_dropped"),
         )
+        .withColumn("bucket_us", F.unix_micros("bucket_start"))
         .collect()
     )
     if not stats:
-        return spark.createDataFrame([], RETENTION_SCHEMA)
+        return _log_frame(spark, [])
 
     if not force:
         tier_path = os.path.join(output_path, f"rollup_{tier}")
@@ -136,24 +210,20 @@ def apply_retention(
                 "nothing was deleted"
             )
 
-    # delete partition directories through the Hadoop FS (storage-agnostic)
-    fs, _ = _fs(spark, retained_path)
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
-    for r in stats:
-        part_dir = os.path.join(
-            retained_path, f"source={r.source}", f"bucket_id={r.bucket_id}"
-        )
-        fs.delete(jvm_path(part_dir), True)
-
-    log_rows = [
-        (run_id, r.source, r.bucket_start, r.rows_dropped, r.n_tok_dropped, tier)
-        for r in stats
-    ]
-    log_df = spark.createDataFrame(log_rows, RETENTION_SCHEMA)
-    log_path = os.path.join(
-        checkpoint_path or output_path, "retention"
+    log_df = _log_once(
+        spark,
+        os.path.join(checkpoint_path or output_path, "retention"),
+        [
+            (run_id, r.source, r.bucket_us, r.rows_dropped, r.n_tok_dropped, tier)
+            for r in stats
+        ],
+        (F.col("tier") == tier)
+        & F.unix_micros("bucket_start").isin([r.bucket_us for r in stats]),
     )
-    log_df.write.mode("append").parquet(log_path)
+    _drop_partitions(
+        spark, retained_path,
+        [os.path.join(f"source={r.source}", f"bucket_id={r.bucket_id}") for r in stats],
+    )
     return log_df
 
 
@@ -193,11 +263,13 @@ def apply_tier_retention(
       singleton buckets; distinct compares the id SETS, not just counts):
       any mismatch — missing coarse bucket, partial fine coverage, drifted
       values — raises :class:`RetentionError` and deletes nothing;
-    - deletion removes whole ``bucket_part`` (day) partition directories
-      through the Hadoop FileSystem API;
-    - dropped partitions are appended to ``{state}/tier_retention`` with
-      the carrier's ``dropped`` measure as ``n_tok_dropped`` and the
-      store name as ``tier`` (the rollup store logs the bare fine tier).
+    - the partitions about to be dropped are first appended, once, to
+      ``{state}/tier_retention`` with the carrier's ``dropped`` measure as
+      ``n_tok_dropped`` and the store name as ``tier`` (the rollup store
+      logs the bare fine tier); a rerun after a kill skips rows already
+      logged;
+    - deletion then removes whole ``bucket_part`` (day) partition
+      directories through the Hadoop FileSystem API.
 
     Works on the stores written by ``merge_increment`` (hive-partitioned by
     ``bucket_part`` = yyyyMMdd of bucket_start)."""
@@ -218,7 +290,7 @@ def apply_tier_retention(
         .collect()
     )
     if not parts:
-        return spark.createDataFrame([], RETENTION_SCHEMA)
+        return _log_frame(spark, [])
 
     if not force:
         fresh = c.from_finer(doomed.drop(_PART), coarse, ["source"], **params)
@@ -239,20 +311,16 @@ def apply_tier_retention(
                 "nothing was deleted"
             )
 
-    fs, _ = _fs(spark, fine_path)
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
-    for r in parts:
-        fs.delete(
-            jvm_path(os.path.join(fine_path, f"{_PART}={r.bucket_part}")), True
-        )
-
     label = fine if kind == "rollup" else f"{kind}_{fine}"
-    log_rows = [
-        (run_id, f"{_PART}={r.bucket_part}", None, r.rows_dropped, r.n_dropped, label)
-        for r in parts
-    ]
-    log_df = spark.createDataFrame(log_rows, RETENTION_SCHEMA)
-    log_df.write.mode("append").parquet(
-        os.path.join(state_path, "tier_retention")
+    names = [f"{_PART}={r.bucket_part}" for r in parts]
+    log_df = _log_once(
+        spark,
+        os.path.join(state_path, "tier_retention"),
+        [
+            (run_id, name, None, r.rows_dropped, r.n_dropped, label)
+            for name, r in zip(names, parts)
+        ],
+        (F.col("tier") == label) & F.col("source").isin(names),
     )
+    _drop_partitions(spark, fine_path, names)
     return log_df

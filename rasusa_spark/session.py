@@ -7,6 +7,7 @@ for the local harness (a real cluster overrides via spark-submit conf).
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import SparkSession
@@ -51,3 +52,27 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, settings: dict[str, str]):
+    """Scope SQL conf ``settings`` to the queries run inside the block: the
+    previous values are restored on exit, so later queries in the same
+    session keep the session's posture (ADVICE r5)."""
+    prev = {k: spark.conf.get(k, None) for k in settings}
+    for k, v in settings.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def dynamic_overwrite(spark: SparkSession):
+    """partitionOverwriteMode=dynamic for one write: unrelated later
+    ``mode('overwrite').partitionBy(...)`` writes stay static."""
+    return scoped_conf(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"})

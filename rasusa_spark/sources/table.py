@@ -22,8 +22,11 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..session import dynamic_overwrite
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -131,13 +134,18 @@ def compact_tokens_table(
         return 0
 
     k1, k2 = keys
-    plan = spark.createDataFrame(todo, f"_pv1 string, _pv2 string, n_out int")
-    paths = part_paths
-    df = spark.read.option("basePath", qualified_root.toString()).parquet(*paths)
-    total_slots = sum(n for _, _, n in todo)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    # the slot plan as an Arrow-backed frame: built in the JVM, no Python
+    # worker round trip for a few rows of metadata
+    pv1, pv2, slots = zip(*todo)
+    plan = spark.createDataFrame(
+        pa.table({
+            "_pv1": pa.array(pv1, pa.string()),
+            "_pv2": pa.array(pv2, pa.string()),
+            "n_out": pa.array(slots, pa.int32()),
+        })
+    )
+    df = spark.read.option("basePath", qualified_root.toString()).parquet(*part_paths)
+    with dynamic_overwrite(spark):
         (
             df.join(
                 F.broadcast(plan),
@@ -145,12 +153,10 @@ def compact_tokens_table(
                 & (F.col(k2).cast("string") == F.col("_pv2")),
             )
             .withColumn("_slot", F.pmod(F.xxhash64(id_col), F.col("n_out")))
-            .repartition(max(total_slots, 1), k1, k2, "_slot")
+            .repartition(sum(slots), k1, k2, "_slot")
             .drop("n_out", "_slot", "_pv1", "_pv2")
             .write.mode("overwrite")
             .partitionBy(k1, k2)
             .parquet(location)
         )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     return len(todo)

@@ -13,13 +13,28 @@ source.rs:57-116) or accepted when ``allow_late`` (they merge exactly,
 since the merge is associative).
 
 The store is hive-partitioned by bucket day; a merge reads and rewrites
-ONLY the partitions its increment touches (dynamic partition overwrite —
-the same pattern plans/checkpoint.py uses), so the I/O is O(delta), not
-O(store). The per-group watermark lives in a compact side table instead
-of being re-derived from a full store scan. With ``files`` the merge is a
-crash-safe stage → intent → promote transaction; ``recover_pending``
-rolls an interrupted one forward at the start of the next merge on either
-path.
+ONLY the partitions its increment touches, so the I/O is O(delta), not
+O(store). Every merge, with or without ``files``, is one replayable
+transaction (``_merge_increment``): stage the merged touched days, commit
+an intent that carries the advanced per-group watermark, then promote by
+renaming the staged day directories into the store. ``recover_pending``
+rolls an interrupted one forward at the start of the next merge. So:
+
+- a kill before the intent commits leaves the store untouched, and the
+  rerun folds the increment once;
+- a kill after it is rolled forward by the next merge, which applies the
+  store and the watermark together; a rerun of the same increment is then
+  refused as late — unless every bucket it holds is its group's newest
+  one, which the watermark admits (so a plain rerun of a single-bucket
+  increment folds it twice);
+- ``files`` adds a per-store manifest of the input files already folded:
+  a file is folded exactly once, and re-sending one is refused.
+
+The watermark and the intent are a few rows each: the driver writes them
+with pyarrow through the Hadoop FS, not with Spark jobs. Spark runs one
+bounded aggregate of the increment (late check, touched days and new
+watermark in one collect) and one staging write, plus the manifest check
+with ``files``; AQE is off for these increment-sized queries.
 
 The carrier table ``CARRIERS`` drives ``merge_increment`` here and
 ``plans/retention.apply_tier_retention``. Each entry: kind (= store
@@ -46,41 +61,28 @@ same-bucket appends.
 
 from __future__ import annotations
 
-import contextlib
+import datetime as dt
 import os
+import uuid
 from dataclasses import dataclass
 from typing import Callable
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from ..functions.cms import cms_from_finer, cms_partials
 from ..functions.distinct import distinct_from_finer, distinct_partials
 from ..functions.histsketch import histogram_rollup, histogram_rollup_from_finer
 from ..operators import timeseries as ts
 from ..operators.rollup import rollup, rollup_from_finer, tier_seconds
+from ..session import scoped_conf
 
 _PART = "bucket_part"  # hive partition column: day of bucket_start
-
-
-@contextlib.contextmanager
-def _dynamic_overwrite(spark: SparkSession):
-    """Scope spark.sql.sources.partitionOverwriteMode=dynamic to one write:
-    the previous value is restored on exit so unrelated later
-    mode('overwrite').partitionBy(...) writes in the same session don't
-    silently become dynamic (ADVICE r5)."""
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "dynamic")
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 def _fs(spark: SparkSession, path: str):
@@ -90,10 +92,86 @@ def _fs(spark: SparkSession, path: str):
     return fs, jpath
 
 
+def _child(spark: SparkSession, parent, name: str):
+    """Hadoop Path ``name`` under the Hadoop Path ``parent``."""
+    return spark._jvm.org.apache.hadoop.fs.Path(parent, name)  # noqa: SLF001
+
+
 def _fs_delete(spark: SparkSession, path: str) -> None:
     fs, jpath = _fs(spark, path)
     if fs.exists(jpath):
         fs.delete(jpath, True)
+
+
+def _rename(fs, src, dst) -> None:
+    if not fs.rename(src, dst):
+        raise OSError(f"could not rename {src} to {dst}")
+
+
+def _write_bytes(fs, jpath, data: bytes) -> None:
+    out = fs.create(jpath, True)
+    try:
+        out.write(bytearray(data))
+    finally:
+        out.close()
+
+
+def _read_bytes(spark: SparkSession, fs, jpath) -> bytes:
+    stream = fs.open(jpath)
+    try:
+        return bytes(
+            spark._jvm.org.apache.hadoop.io.IOUtils.readFullyToByteArray(stream)  # noqa: SLF001
+        )
+    finally:
+        stream.close()
+
+
+def parquet_bytes(table: pa.Table) -> bytes:
+    sink = pa.BufferOutputStream()
+    pq.write_table(table, sink)
+    return sink.getvalue().to_pybytes()
+
+
+def put_file(spark: SparkSession, path: str, data: bytes) -> None:
+    """Write one small file from the driver: to a hidden sibling (readers
+    skip ``.``-names), then renamed over ``path``."""
+    fs, jpath = _fs(spark, path)
+    tmp = _child(spark, jpath.getParent(), f".{jpath.getName()}.tmp")
+    _write_bytes(fs, tmp, data)
+    fs.delete(jpath, True)
+    _rename(fs, tmp, jpath)
+
+
+def _put_dir(spark: SparkSession, path: str, files: dict[str, bytes]) -> None:
+    """Replace the directory ``path`` by one holding exactly ``files``,
+    written under ``{path}.tmp`` and swapped in by a rename. A kill between
+    the delete and the rename leaves ``path`` absent; every caller runs
+    inside a promote, which the intent replays."""
+    fs, jpath = _fs(spark, path)
+    _, tmp = _fs(spark, f"{path}.tmp")
+    fs.delete(tmp, True)
+    for name, data in files.items():
+        _write_bytes(fs, _child(spark, tmp, name), data)
+    fs.delete(jpath, True)
+    _rename(fs, tmp, jpath)
+
+
+def _read_table(spark: SparkSession, path: str) -> pa.Table | None:
+    """A small parquet dataset (a file, or a directory of part files) read
+    on the driver; None when it does not exist or holds no part file."""
+    fs, jpath = _fs(spark, path)
+    if not fs.exists(jpath):
+        return None
+    parts = [
+        st.getPath()
+        for st in fs.listStatus(jpath)
+        if st.isFile() and not st.getPath().getName().startswith(("_", "."))
+    ]
+    if not parts:
+        return None
+    return pa.concat_tables(
+        pq.read_table(pa.BufferReader(_read_bytes(spark, fs, p))) for p in parts
+    )
 
 
 def read_store(
@@ -119,102 +197,120 @@ def read_store(
 
 def _txn_paths(state_path: str, store_name: str) -> dict[str, str]:
     """On-disk layout of one store's merge transaction: ``manifest`` is the
-    durable list of input files already folded into the store; ``staging``
-    holds the full new content of every touched partition; ``txnwm`` the
-    advanced watermark rows; ``intent`` the file list being applied — its
-    existence (with _SUCCESS) is the signal that a prepared transaction
-    must be rolled FORWARD."""
+    durable list of input files already folded into the store (one part
+    file per transaction); ``staging`` holds the full new content of every
+    touched day partition; ``intent`` commits a prepared transaction — its
+    ``part-<id>.parquet`` lists the input files (none on the plain path),
+    its ``_wm.parquet`` is the advanced watermark, and its existence with
+    ``_SUCCESS`` is the signal that the transaction must be rolled
+    FORWARD."""
+    base = os.path.join(state_path, store_name)
     return {
-        "manifest": os.path.join(state_path, f"{store_name}_files"),
-        "staging": os.path.join(state_path, f"{store_name}_txn_staging"),
-        "txnwm": os.path.join(state_path, f"{store_name}_txn_wm"),
-        "intent": os.path.join(state_path, f"{store_name}_txn_intent"),
+        "store": base,
+        "wm": f"{base}_wm",
+        "manifest": f"{base}_files",
+        "staging": f"{base}_txn_staging",
+        "intent": f"{base}_txn_intent",
     }
 
 
 def _txn_cleanup(spark: SparkSession, state_path: str, store_name: str) -> None:
     """Commit a promoted transaction: deleting the INTENT first is the
     commit point (recovery replays only while the intent exists); the
-    staging/wm scratch goes after."""
+    staging scratch goes after."""
     p = _txn_paths(state_path, store_name)
     _fs_delete(spark, p["intent"])
-    _fs_delete(spark, p["txnwm"])
+    _fs_delete(spark, f"{p['intent']}.tmp")
     _fs_delete(spark, p["staging"])
 
 
 def _txn_promote(spark: SparkSession, state_path: str, store_name: str) -> None:
-    """Apply a PREPARED transaction: overwrite the touched store partitions
-    from staging, advance the watermark, union the intent's file list into
-    the manifest, then clean up. Every step is idempotent (staging holds
-    the complete new content of each touched partition; manifest union is
-    set union; watermark overwrite is absolute), so a kill anywhere here is
-    repaired by re-running this function — which ``recover_pending`` does
-    on the next merge."""
+    """Apply a PREPARED transaction: rename every staged ``bucket_part=``
+    directory over the store's, write the watermark the intent carries,
+    add the intent's file list to the manifest, then clean up. Each step is
+    idempotent — a staged day is moved once and then no longer staged, the
+    watermark write is absolute and the manifest part file is named after
+    the transaction — so a kill anywhere here is repaired by re-running
+    this function, which ``recover_pending`` does on the next merge."""
     p = _txn_paths(state_path, store_name)
-    store = os.path.join(state_path, store_name)
-    wm_path = os.path.join(state_path, f"{store_name}_wm")
+    fs, store = _fs(spark, p["store"])
+    fs.mkdirs(store)
+    _, staging = _fs(spark, p["staging"])
+    if fs.exists(staging):
+        for st in fs.listStatus(staging):
+            name = st.getPath().getName()
+            if st.isDirectory() and name.startswith(f"{_PART}="):
+                fs.delete(_child(spark, store, name), True)
+                _rename(fs, st.getPath(), _child(spark, store, name))
 
-    # The intent pins each staged dataset's schema (ADVICE r5): an EMPTY
-    # increment can stage zero parquet part files, and an inferred-schema
-    # read of that directory throws on every recovery replay — wedging the
-    # store until the intent is hand-deleted. Pre-pinning intents (no DDL
-    # columns) fall back to inference, preserving recovery of transactions
-    # prepared by older code.
-    intent_df = spark.read.parquet(p["intent"])
-    first = intent_df.limit(1).collect()[0]
-    cols = set(intent_df.columns)
-
-    def _reader(ddl_col: str):
-        if ddl_col in cols and getattr(first, ddl_col) is not None:
-            return spark.read.schema(T.StructType.fromDDL(getattr(first, ddl_col)))
-        return spark.read
-
-    staging = _reader("staging_ddl").parquet(p["staging"])  # _PART is data here
-    with _dynamic_overwrite(spark):
-        staging.write.mode("overwrite").partitionBy(_PART).parquet(store)
-
-    _reader("txnwm_ddl").parquet(p["txnwm"]).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(wm_path)
-
-    files = {r.path for r in intent_df.select("path").collect()}
-    manifest = read_store(spark, p["manifest"])
-    if manifest is not None:
-        files |= {r.path for r in manifest.collect()}
-    spark.createDataFrame(
-        sorted((f,) for f in files), "path string"
-    ).coalesce(1).write.mode("overwrite").parquet(p["manifest"])
-
+    _, intent = _fs(spark, p["intent"])
+    wm = _read_bytes(spark, fs, _child(spark, intent, "_wm.parquet"))
+    _put_dir(spark, p["wm"], {"part-00000.parquet": wm, "_SUCCESS": b""})
+    for st in fs.listStatus(intent):
+        name = st.getPath().getName()
+        if not name.startswith(("_", ".")):
+            put_file(
+                spark, os.path.join(p["manifest"], name),
+                _read_bytes(spark, fs, st.getPath()),
+            )
     _txn_cleanup(spark, state_path, store_name)
 
 
 def recover_pending(spark: SparkSession, state_path: str, store_name: str) -> bool:
-    """Repair a merge transaction interrupted by a crash (ADVICE r4: the
-    old flow's single post-hoc manifest made a kill between merge and
-    manifest double-count the non-idempotent sum/histogram/CMS tiers on
-    resume). Two cases:
+    """Repair a merge transaction interrupted by a crash, on either path
+    (ADVICE r4: a kill between a store write and its bookkeeping made the
+    resume double-count the non-idempotent sum/histogram/CMS tiers). Two
+    cases:
 
     - intent present (with _SUCCESS): the transaction was fully prepared —
-      roll it FORWARD by replaying the idempotent promote. Returns True.
-    - no (valid) intent: any staging/wm scratch is from a crash BEFORE the
-      prepare phase committed — the store and manifest are untouched, so
-      the scratch is dead weight; delete it. The interrupted files stay
-      out of the manifest and the next merge re-applies them from the
-      original input. Returns False.
+      roll it FORWARD by replaying the idempotent promote, which applies
+      the staged days, the watermark and the file list together. Returns
+      True.
+    - no (valid) intent: any staging scratch is from a crash BEFORE the
+      prepare phase committed — the store, watermark and manifest are
+      untouched, so the scratch is dead weight; delete it. The interrupted
+      increment stays unapplied: a rerun folds it once (with ``files``, the
+      files are still absent from the manifest). Returns False.
 
-    Callers must run this BEFORE reading the manifest to compute the
-    not-yet-merged file set (a pending transaction's files land in the
-    manifest only during replay)."""
+    Callers must run this BEFORE reading the watermark or the manifest (a
+    pending transaction's watermark and files land only during replay).
+    Driver-side FS calls only: no Spark job."""
     p = _txn_paths(state_path, store_name)
-    fs, intent_jpath = _fs(spark, p["intent"])
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
-    if not fs.exists(intent_jpath) or not fs.exists(
-        jvm_path(os.path.join(p["intent"], "_SUCCESS"))
-    ):
+    fs, intent = _fs(spark, p["intent"])
+    if not fs.exists(_child(spark, intent, "_SUCCESS")):
         _txn_cleanup(spark, state_path, store_name)
         return False
     _txn_promote(spark, state_path, store_name)
     return True
+
+
+def _micros(col: pa.ChunkedArray) -> list[int]:
+    """A parquet timestamp column (Spark's INT96 or micros, any zone) as
+    epoch microseconds."""
+    return col.cast(pa.timestamp("us", tz=col.type.tz)).cast(pa.int64()).to_pylist()
+
+
+def _read_wm(spark: SparkSession, path: str, group_cols: list[str]) -> dict:
+    """The per-group watermark: group key tuple → epoch micros."""
+    table = _read_table(spark, path)
+    if table is None:
+        return {}
+    keys = zip(*(table.column(c).to_pylist() for c in group_cols))
+    return dict(zip(keys, _micros(table.column("_wm"))))
+
+
+def _wm_table(wm: dict, schema: T.StructType, group_cols: list[str]) -> pa.Table:
+    """The watermark as the table Spark reads back: the group columns in
+    their increment types and ``_wm`` typed like ``bucket_start``."""
+    keys = sorted(wm, key=repr)
+    cols = {
+        c: pa.array([k[i] for k in keys], to_arrow_type(schema[c].dataType))
+        for i, c in enumerate(group_cols)
+    }
+    cols["_wm"] = pa.array([wm[k] for k in keys], pa.int64()).cast(
+        to_arrow_type(schema["bucket_start"].dataType)
+    )
+    return pa.table(cols)
 
 
 def _merge_increment(
@@ -227,134 +323,138 @@ def _merge_increment(
     allow_late: bool,
     txn_files: list[str] | None = None,
 ) -> DataFrame:
-    """Shared O(delta) merge machinery: watermark guard, partition-pruned
-    read of only the touched bucket days, ``remerge(union)`` to re-aggregate
-    (must be exactly associative), dynamic partition overwrite, compact
-    per-group watermark advance. ``inc`` must be the increment already
-    aggregated to (group_cols, bucket_start) granularity.
+    """Shared O(delta) merge: one replayable transaction for both paths.
+    ``inc`` must be the increment already aggregated to (group_cols,
+    bucket_start) granularity; ``remerge`` re-aggregates a union of stored
+    and new rows (it must be exactly associative).
 
-    With ``txn_files`` (the input file paths ``inc`` was built from) the
-    merge is a crash-safe roll-forward TRANSACTION: the merged content of
-    every touched partition is staged durably first, then an intent record
-    commits the prepare phase, then a replayable promote applies store +
-    watermark + per-store file manifest together. A kill at any point
-    either leaves the store/manifest pair untouched (pre-intent) or is
-    rolled forward exactly once by ``recover_pending`` — never a partial
-    state that re-merges the same file into a non-idempotent carrier."""
+    1. ``recover_pending`` rolls a prepared earlier transaction forward.
+    2. One collected aggregate of the persisted increment gives, per
+       group, min/max ``unix_micros(bucket_start)`` and the touched
+       ``bucket_part`` days: the late check against the watermark, the
+       advanced watermark and the days to rewrite.
+    3. With ``txn_files``, one filtered read of the manifest refuses input
+       files already folded.
+    4. ``remerge(touched stored days ∪ inc)`` is staged to
+       ``{store}_txn_staging``, one file per touched day; the stored days
+       are read partition by partition with the known schema.
+    5. The intent — the file list and the advanced watermark — is written
+       on the driver and committed by a rename; ``_txn_promote`` then
+       renames each staged day over the store's, writes the watermark and
+       appends the manifest.
+
+    A kill before 5 commits leaves store, watermark and manifest as they
+    were; after it, the next merge rolls the transaction forward exactly
+    once. A rerun of the same increment is therefore folded once, or
+    refused as late, or (with ``txn_files``) refused as already merged.
+    Returns the store, read lazily with the increment's schema."""
     if txn_files is not None and not txn_files:
         raise ValueError(
             "txn merge called with an empty file list — nothing to "
             "fold; list new files first (the no-op has no intent to "
             "record)"
         )
-    # a crashed prior transaction must roll forward BEFORE this merge
-    # reads the watermark/manifest, on BOTH paths: a plain merge that
-    # skipped it would write over partitions that the pending intent's
-    # stale staging later replays over (driver-side FS checks only when
-    # no intent exists — no Spark job)
     recover_pending(spark, state_path, store_name)
-    inc = inc.persist()
-    store = os.path.join(state_path, store_name)
-    wm_path = os.path.join(state_path, f"{store_name}_wm")
-    wm = read_store(spark, wm_path)
+    p = _txn_paths(state_path, store_name)
+    store_schema = T.StructType(
+        inc.schema.fields + [T.StructField(_PART, T.StringType())]
+    )
+    wm = _read_wm(spark, p["wm"], group_cols)
+    part_expr = F.date_format("bucket_start", "yyyyMMdd")
 
-    if wm is not None and not allow_late:
-        late = inc.join(wm, on=group_cols, how="inner").where(
-            F.col("bucket_start") < F.col("_wm")
-        )
-        n_late = late.count()
-        if n_late:
-            inc.unpersist()
-            raise ValueError(
-                f"{n_late} late bucket-updates behind the watermark; "
-                "pass allow_late=True to merge them (exact, associative)"
-            )
-
-    if txn_files is not None:
-        p = _txn_paths(state_path, store_name)
-        manifest = read_store(spark, p["manifest"])
-        if manifest is not None:
-            seen = {r.path for r in manifest.collect()}
-            dup = sorted(f for f in txn_files if f in seen)
-            if dup:
-                inc.unpersist()
-                raise ValueError(
-                    f"{len(dup)} input file(s) already in {store_name}'s "
-                    f"merged manifest (first: {dup[0]}) — stale file list; "
-                    "run recover_pending and re-list before merging"
+    # the increment-sized queries below gain nothing from AQE but its
+    # per-stage jobs; data-sized work elsewhere keeps the session's setting
+    with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
+        inc = inc.persist()
+        try:
+            us = F.unix_micros(F.col("bucket_start").cast("timestamp"))
+            stats = (
+                inc.groupBy(*group_cols)
+                .agg(
+                    F.min(us).alias("_lo"),
+                    F.max(us).alias("_hi"),
+                    F.collect_set(part_expr).alias("_parts"),
                 )
+                .collect()
+            )  # bounded: one row per group, one entry per touched day
+            late = [
+                (key, r._lo)
+                for r in stats
+                if (key := tuple(r[c] for c in group_cols)) in wm and r._lo < wm[key]
+            ]
+            if late and not allow_late:
+                key, lo = late[0]
+                raise ValueError(
+                    f"{len(late)} group(s) with late bucket-updates behind the "
+                    f"watermark (first: {key} at "
+                    f"{dt.datetime(1970, 1, 1) + dt.timedelta(microseconds=lo)}); "
+                    "pass allow_late=True to merge them (exact, associative)"
+                )
+            if txn_files is not None:
+                _refuse_merged_files(spark, p["manifest"], store_name, txn_files)
 
-    part_expr = F.date_format("bucket_start", "yyyyMMdd").alias(_PART)
-    existing = read_store(spark, store)
-    if existing is not None:
-        # partition-pruned read of ONLY the touched days (bounded driver
-        # list: one entry per distinct increment day)
-        touched = [r[0] for r in inc.select(part_expr).distinct().collect()]
-        merged = remerge(
-            existing.where(F.col(_PART).isin(touched)).drop(_PART).unionByName(inc)
-        )
-        if txn_files is None:
-            # the write below overwrites partitions the plan also reads —
-            # cut the lineage first (bounded: only touched partitions);
-            # the txn path materializes to staging instead, which both
-            # cuts the lineage and makes the promote replayable
-            merged = merged.localCheckpoint(eager=True)
-    else:
-        merged = inc
+            new_wm = dict(wm)
+            for r in stats:
+                key = tuple(r[c] for c in group_cols)
+                new_wm[key] = max(new_wm.get(key, r._hi), r._hi)
+            touched = sorted({d for r in stats for d in r._parts})
+            if touched:
+                fs, store = _fs(spark, p["store"])
+                stored = [
+                    os.path.join(p["store"], f"{_PART}={t}")
+                    for t in touched
+                    if fs.exists(_child(spark, store, f"{_PART}={t}"))
+                ]
+                merged = inc
+                if stored:
+                    old = (
+                        spark.read.schema(store_schema)
+                        .option("basePath", p["store"])
+                        .parquet(*stored)
+                        .drop(_PART)
+                    )
+                    merged = remerge(old.unionByName(inc)).select(*inc.columns)
+                (
+                    merged.withColumn(_PART, part_expr)
+                    .repartition(len(touched), _PART)  # one file per day
+                    .write.mode("overwrite")
+                    .partitionBy(_PART)
+                    .parquet(p["staging"])
+                )
+        finally:
+            inc.unpersist()
 
-    # advance the compact per-group watermark table (tiny — one row/group)
-    inc_wm = inc.groupBy(*group_cols).agg(F.max("bucket_start").alias("_wm"))
-    if wm is not None:
-        new_wm = (
-            wm.unionByName(inc_wm)
-            .groupBy(*group_cols)
-            .agg(F.max("_wm").alias("_wm"))
-        )
-    else:
-        new_wm = inc_wm
-
+    intent = {"_wm.parquet": parquet_bytes(_wm_table(new_wm, inc.schema, group_cols))}
     if txn_files is not None:
-        # prepare: stage merged partitions (durable, outside the store —
-        # _PART stays a DATA column so read-back types survive), then the
-        # advanced watermark, then the intent marker LAST (its _SUCCESS
-        # commits the prepare phase)
-        staged = merged.withColumn(_PART, F.date_format("bucket_start", "yyyyMMdd"))
-        staged.write.mode("overwrite").parquet(p["staging"])
-        new_wm_rows = new_wm.collect()  # bounded: one row per group
-        spark.createDataFrame(new_wm_rows, new_wm.schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(p["txnwm"])
-        # schema DDLs ride in the intent so the replayed promote never
-        # depends on part files existing in staging (empty increments)
-        staging_ddl = staged.schema.toDDL()
-        txnwm_ddl = new_wm.schema.toDDL()
-        spark.createDataFrame(
-            [(f, staging_ddl, txnwm_ddl) for f in txn_files],
-            "path string, staging_ddl string, txnwm_ddl string",
-        ).coalesce(1).write.mode("overwrite").parquet(p["intent"])
-        inc.unpersist()
-        _txn_promote(spark, state_path, store_name)
-        return _stored_tier(spark, store, inc.schema)
-
-    with _dynamic_overwrite(spark):
-        merged.withColumn(
-            _PART, F.date_format("bucket_start", "yyyyMMdd")
-        ).write.mode("overwrite").partitionBy(_PART).parquet(store)
-
-    new_wm_rows = new_wm.collect()  # bounded: one row per group
-    inc.unpersist()
-    spark.createDataFrame(new_wm_rows, new_wm.schema).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(wm_path)
-    return _stored_tier(spark, store, inc.schema)
+        files = pa.table({"path": pa.array(sorted(txn_files), pa.string())})
+        intent[f"part-{uuid.uuid4().hex}.parquet"] = parquet_bytes(files)
+    intent["_SUCCESS"] = b""
+    _put_dir(spark, p["intent"], intent)
+    _txn_promote(spark, state_path, store_name)
+    return spark.read.schema(store_schema).parquet(p["store"]).drop(_PART)
 
 
-def _stored_tier(spark: SparkSession, store: str, schema) -> DataFrame:
-    """The merged tier without its hive partition column; a store with no
-    part files yet (an empty first increment) reads as an empty frame of
-    the increment's schema."""
-    stored = read_store(spark, store)
-    return spark.createDataFrame([], schema) if stored is None else stored.drop(_PART)
+def _refuse_merged_files(
+    spark: SparkSession, manifest: str, store_name: str, files: list[str]
+) -> None:
+    """Raise when any of ``files`` is already in the manifest (one filtered
+    Spark read: the manifest grows with history)."""
+    fs, jpath = _fs(spark, manifest)
+    if not fs.exists(jpath):
+        return
+    dup = sorted(
+        r.path
+        for r in spark.read.schema("path string")
+        .parquet(manifest)
+        .where(F.col("path").isin(list(files)))
+        .collect()
+    )
+    if dup:
+        raise ValueError(
+            f"{len(dup)} input file(s) already in {store_name}'s "
+            f"merged manifest (first: {dup[0]}) — stale file list; "
+            "run recover_pending and re-list before merging"
+        )
 
 
 @dataclass(frozen=True)

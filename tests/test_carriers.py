@@ -310,3 +310,105 @@ def test_plain_merge_rolls_pending_txn_forward(spark, raw2k, tmp_path, monkeypat
     assert _key(spark.read.parquet(store), batch.columns) == _key(
         batch, batch.columns
     )
+
+
+def test_plain_merge_killed_after_intent_is_refused_as_late(
+    spark, raw2k, tmp_path, monkeypatch
+):
+    """A plain merge killed after its intent commits is rolled forward by
+    the rerun, which then refuses the same increment as late: the store
+    holds one fold of the batch partials. (A kill between a store write
+    and the watermark write would let the rerun pass the late check and
+    fold the increment twice.)"""
+    import rasusa_spark.streaming.incremental as inc_mod
+
+    parts = _thirds(raw2k)
+    first, second = parts[0], parts[1].unionByName(parts[2])
+    state = str(tmp_path / "state")
+    merge_increment(spark, "rollup", first, state)
+
+    def dying(*a):
+        raise RuntimeError("injected crash before promote")
+
+    monkeypatch.setattr(inc_mod, "_txn_promote", dying)
+    with pytest.raises(RuntimeError, match="injected"):
+        merge_increment(spark, "rollup", second, state)
+    monkeypatch.undo()
+    assert os.path.exists(f"{state}/rollup_1h_txn_intent/_SUCCESS")
+
+    with pytest.raises(ValueError, match="late bucket"):
+        merge_increment(spark, "rollup", second, state)
+    batch = CARRIERS["rollup"].partials(raw2k, "1h", ["source"])
+    assert _key(spark.read.parquet(f"{state}/rollup_1h"), batch.columns) == _key(
+        batch, batch.columns
+    )
+
+
+def _jobs(spark, group, fn) -> int:
+    """The number of Spark jobs ``fn`` launches, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("path", ["plain", "txn"])
+def test_steady_merge_job_budget(spark, raw2k, tmp_path, path):
+    """A steady merge into a store that already holds history launches at
+    most 4 Spark jobs on the plain path and 6 on the transaction path,
+    and leaves one parquet file in every bucket_part it touched."""
+    import glob
+
+    parts = _thirds(raw2k)
+    state = str(tmp_path / "state")
+    txn = path == "txn"
+    merge_increment(spark, "rollup", parts[0], state, files=["f1"] if txn else None)
+    touched = {
+        r[0] for r in parts[1].select(F.date_format("ts", "yyyyMMdd")).distinct().collect()
+    }
+    n = _jobs(
+        spark, f"steady-merge-{path}",
+        lambda: merge_increment(
+            spark, "rollup", parts[1], state, allow_late=True,
+            files=["f2"] if txn else None,
+        ),
+    )
+    assert n <= (6 if txn else 4), f"{path} merge launched {n} Spark jobs"
+    for day in touched:
+        files = glob.glob(f"{state}/rollup_1h/bucket_part={day}/*.parquet")
+        assert len(files) == 1, f"bucket_part={day} holds {len(files)} files"
+
+
+def test_tier_retention_killed_before_delete_logs_once(
+    spark, raw2k, tmp_path, monkeypatch
+):
+    """A tier retention killed after it appended its log rows but before
+    it deleted the partitions is completed by the rerun, and every dropped
+    1h day is logged exactly once."""
+    import rasusa_spark.plans.retention as ret_mod
+
+    state = str(tmp_path / "s")
+    merge_increment(spark, "rollup", raw2k, state, tier="1h")
+    merge_increment(spark, "rollup", raw2k, state, tier="1d", allow_late=True)
+    days = _days(spark, f"{state}/rollup_1h")
+    cd = days[2]
+    cutoff = f"{cd[:4]}-{cd[4:6]}-{cd[6:]} 00:00:00"
+
+    def dying(*a):
+        raise RuntimeError("injected crash before delete")
+
+    monkeypatch.setattr(ret_mod, "_drop_partitions", dying)
+    with pytest.raises(RuntimeError, match="injected"):
+        apply_tier_retention(spark, state, drop_before=cutoff, run_id="killed")
+    monkeypatch.undo()
+    assert _days(spark, f"{state}/rollup_1h") == days
+
+    apply_tier_retention(spark, state, drop_before=cutoff, run_id="rerun")
+    assert _days(spark, f"{state}/rollup_1h") == days[2:]
+    logged = [
+        r.source for r in spark.read.parquet(f"{state}/tier_retention").collect()
+    ]
+    assert sorted(logged) == [f"bucket_part={d}" for d in days[:2]]

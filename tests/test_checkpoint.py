@@ -341,3 +341,44 @@ def test_tier_retention_requires_day_aligned_cutoff(spark, tmp_path):
             spark, str(tmp_path), drop_before="2026-04-07 00:00:00",
             fine="raw", coarse="1h",
         )
+
+
+def test_retention_killed_before_delete_logs_once(spark, raw2k, tmp_path, monkeypatch):
+    """A raw retention killed after it appended its log rows but before it
+    deleted the partitions is completed by the rerun, and every dropped
+    bucket is logged exactly once with its row count."""
+    import rasusa_spark.plans.retention as ret_mod
+    from rasusa_spark.plans.retention import apply_retention, read_retention_log
+
+    out, ck = _setup_store(spark, raw2k, tmp_path, "ret4")
+    before = read_retained(spark, out)
+    buckets = sorted(
+        r.bucket_start for r in before.select("bucket_start").distinct().collect()
+    )
+    cutoff = buckets[len(buckets) // 2]
+    doomed = {
+        (r.source, r.bucket_start): r["count"]
+        for r in before.where(F.col("bucket_start") < F.lit(cutoff))
+        .groupBy("source", "bucket_start")
+        .count()
+        .collect()
+    }
+
+    def dying(*a):
+        raise RuntimeError("injected crash before delete")
+
+    monkeypatch.setattr(ret_mod, "_drop_partitions", dying)
+    with pytest.raises(RuntimeError, match="injected"):
+        apply_retention(
+            spark, out, drop_before=str(cutoff), run_id="killed", checkpoint_path=ck
+        )
+    monkeypatch.undo()
+    assert read_retained(spark, out).count() == before.count()
+
+    apply_retention(spark, out, drop_before=str(cutoff), run_id="rerun", checkpoint_path=ck)
+    assert read_retained(spark, out).where(F.col("bucket_start") < F.lit(cutoff)).count() == 0
+    logged = [
+        (r.source, r.bucket_start, r.rows_dropped)
+        for r in read_retention_log(spark, ck).collect()
+    ]
+    assert sorted(logged) == sorted((s, b, n) for (s, b), n in doomed.items())
